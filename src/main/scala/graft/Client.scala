@@ -1,7 +1,8 @@
 package graft
 
 import graft.functions.Embedder
-import graft.operators.{Ann, Bm25, Crud, Dedup, Filter, Knn, ModelStore, PackedGraph, PackedKnn, PackedPq, PackedSq, Quantization}
+import graft.GraftCollection.Delta
+import graft.operators.{Ann, Bm25, Dedup, Filter, Knn, ModelStore, PackedGraph, PackedKnn, PackedPq, PackedSq, Quantization}
 import graft.sources.Collections
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -62,6 +63,15 @@ object GraftCollection {
     StructField("document", StringType, nullable = true),
     StructField("embedding", ArrayType(FloatType), nullable = true)))
 
+  /** One write's delta, evaluated once: the appended generation (read
+    * back from its own files, so the keyword delta and every tier hook
+    * scan the batch, not the collection), the live ids it tombstones, the
+    * (docs, summed doc length) those ids take out of the keyword index,
+    * and whether it truncates. */
+  private final case class Delta(rows: Option[DataFrame], dead: Seq[String],
+                                 removed: (Long, Long) = (0L, 0L),
+                                 truncate: Boolean = false)
+
   /** Is a sidecar warm-start failure a LOAD/FORMAT problem (recoverable:
     * warn + cold rebuild) or a genuine bug that must propagate? Load
     * problems surface as IO errors, Spark read/analysis errors (missing
@@ -94,31 +104,81 @@ object GraftCollection {
   }
 }
 
-/** One named collection. Mutations rewrite the parquet data dir (the batch
-  * engine's transaction unit); reads are plain scans so Catalyst prunes
-  * and pushes down into them. All text embedding — add-time corpus
-  * embedding and query-time text embedding — flows through the
-  * collection's configured [[Embedder]]. */
+/** One named collection. Writes are merge-on-read: each add, upsert,
+  * update or delete appends its batch as a new generation of data files
+  * under `data/` and records replaced or deleted ids as tombstones
+  * `(id, generation)`; no write rewrites the stored rows or the keyword
+  * sidecar, so a write costs O(batch), not O(collection). A small
+  * manifest (`_manifest`) is the commit point: files no manifest lists
+  * are invisible. Reads are one parquet scan over the base and the
+  * committed generations with the tombstones applied as an id filter, so
+  * Catalyst still prunes and pushes down into them. [[optimize]] folds
+  * the generations and tombstones back into one base.
+  *
+  * The documented limits: tombstones are held on the driver (as IN-list
+  * literals of the read plan) until the next [[optimize]], and
+  * `delete()` with no arguments truncates to an empty base — one
+  * truncating generation that hides every earlier one — rather than
+  * tombstoning every id. All text embedding — add-time corpus embedding
+  * and query-time text embedding — flows through the collection's
+  * configured [[Embedder]]. */
 final class GraftCollection(spark: SparkSession, dir: String,
                             val config: Collections.Config,
                             val embedder: Embedder) {
 
-  /** The collection relation, cached per (mutation, layout) stamp pair: a
-    * fresh `spark.read.parquet` per access would pay schema-inference/
-    * listing work on EVERY call (visible as a per-query job on the
-    * serving paths). Any mutation — this handle or a foreign one — bumps
-    * the mutation stamp; a compaction swap (this handle's or a FOREIGN
-    * handle's optimize(), which rewrites the files without changing
-    * contents) bumps the layout stamp — either forces a re-read, so
-    * staleness semantics are exactly the uncached ones. */
-  @transient private var dfCache: ((Long, Long), DataFrame) = null
+  /** The live collection relation, cached per committed manifest: a
+    * fresh read per access would pay listing work on EVERY call (visible
+    * as a per-query job on the serving paths). Every commit — a write
+    * through this handle or a foreign one, or a fold, which bumps the
+    * manifest's layout counter — changes the manifest, so staleness
+    * semantics are exactly the uncached ones. The manifest carries the
+    * schema, so no read infers it. */
+  @transient private var dfCache: (Option[String], DataFrame) = null
   def df: DataFrame = {
-    val stamp = (Collections.readMutationCount(spark, dir),
-      Collections.readLayoutStamp(spark, dir))
-    if (dfCache == null || dfCache._1 != stamp)
-      dfCache = (stamp, spark.read.parquet(s"$dir/data"))
+    val raw = Collections.readManifest(dir)
+    if (dfCache == null || dfCache._1 != raw)
+      dfCache = (raw, liveRows(raw).drop(Collections.GenCol))
     dfCache._2
   }
+
+  private def dataRoot = s"$dir/data"
+  private def tombDir = s"$dir/tombstones"
+
+  /** The committed manifest; a collection written before manifests is a
+    * bare base whose schema is read once from its files. */
+  private def manifestOf(raw: Option[String]): Collections.Manifest =
+    raw.map(Collections.Manifest.parse).getOrElse(Collections.Manifest(0L, 0L,
+      { Collections.recoverSwap(dataRoot); spark.read.parquet(dataRoot).schema.json },
+      Vector.empty))
+
+  /** Tombstone ids per generation: committed files never change, so each
+    * is read once per handle. */
+  @transient private lazy val tombCache = scala.collection.mutable.HashMap[Long, Seq[Any]]()
+
+  /** Base + committed generations with the tombstones applied, `_gen`
+    * kept (the fold writes it through). No Spark job. */
+  private def liveRows(raw: Option[String]): DataFrame = {
+    Collections.recoverSwap(dataRoot)
+    raw match {
+      case None => spark.read.parquet(dataRoot)
+      case Some(r) =>
+        val m = Collections.Manifest.parse(r)
+        val rows = Collections.readGenerations(spark, dataRoot,
+          org.apache.spark.sql.types.DataType.fromJson(m.schema)
+            .asInstanceOf[org.apache.spark.sql.types.StructType],
+          m.gens.collect { case g if g.rows => g.gen })
+        Collections.liveRows(rows, "id", m.gens.map(g => g -> (
+          if (!g.tombstones) Nil
+          else tombCache.getOrElseUpdate(g.gen,
+            Collections.readIds(Collections.tombstonePath(tombDir, g.gen))))))
+    }
+  }
+
+  /** Last committed write generation: the keyword sidecar accepts its
+    * generations up to here (later ones belong to a write that crashed
+    * before its commit). */
+  private def committedGen: Long =
+    Collections.readManifest(dir).map(Collections.Manifest.parse(_).committed).getOrElse(0L)
 
   def count(): Long = df.count()
 
@@ -127,22 +187,30 @@ final class GraftCollection(spark: SparkSession, dir: String,
     * reference's insert. */
   def add(rows: DataFrame): Unit = {
     val (stored, incoming) = aligned(withEmbedding(rows))
-    // rows actually inserted = incoming minus existing ids (insert keeps
-    // the stored row on conflict) — the index delta is append-only
-    val fresh = incoming.join(stored.select("id"), Seq("id"), "left_anti")
-    write(Crud.insertNew(stored, incoming, "id")) {
-      indexAppend(fresh)
-      packedAppend(fresh)
-    }
+    write(stored.schema) { gen =>
+      // rows actually inserted = incoming minus existing ids (insert keeps
+      // the stored row on conflict) — evaluated once, by the delta write
+      Delta(Some(appendGeneration(gen, stored.schema,
+        incoming.join(stored.select("id"), Seq("id"), "left_anti"))), Nil)
+    }(d => packedAppend(d.rows.get))
   }
 
   /** add-or-replace by id (client.py:161-182). */
-  def upsert(rows: DataFrame): Unit = {
+  def upsert(rows: DataFrame): Unit = replace(rows, insertMissing = true)
+
+  /** [[upsert]] and [[update]]: one generation that tombstones the live
+    * rows of the batch's ids and appends the batch — all of it, or for an
+    * update only the rows whose id is live. */
+  private def replace(rows: DataFrame, insertMissing: Boolean): Unit = {
     val (stored, incoming) = aligned(withEmbedding(rows))
-    write(Crud.upsert(stored, incoming, "id")) {
-      indexReplace(incoming)
-      packedReplace(incoming)
-    }
+    write(stored.schema) { gen =>
+      val ids = incoming.select("id").collect().map(_.getString(0)).distinct.toSeq
+      val live = liveLengths(stored.where(col("id").isin(ids: _*)))
+      val batch = appendGeneration(gen, stored.schema,
+        if (insertMissing) incoming
+        else incoming.where(col("id").isin(live.map(_._1): _*)))
+      Delta(Some(batch), live.map(_._1).distinct, removedTotals(live))
+    }(d => packedReplace(d.rows.get))
   }
 
   /** Metadata columns = everything beyond the base schema; the reference
@@ -429,7 +497,7 @@ final class GraftCollection(spark: SparkSession, dir: String,
       .select(col("neighbor_id").as("doc_id"), col("dist"))
     val idx =
       if (hasKeywordIndex) {
-        val full = Bm25.loadIndex(spark, indexDir)
+        val full = keywordIndex
         if (where.isDefined) Bm25.restrict(full, base.select("id")) else full
       } else
         Bm25.buildIndex(base.where(col("document").isNotNull), "id", "document")
@@ -458,28 +526,27 @@ final class GraftCollection(spark: SparkSession, dir: String,
   }
 
   /** update existing rows by id (client.py:357-394); missing ids ignored. */
-  def update(rows: DataFrame): Unit = {
-    val (stored, incoming) = aligned(withEmbedding(rows))
-    val updates = incoming.join(stored.select("id"), Seq("id"), "left_semi")
-    write(Crud.upsert(stored, updates, "id")) {
-      indexReplace(updates)
-      packedReplace(updates)
-    }
-  }
+  def update(rows: DataFrame): Unit = replace(rows, insertMissing = false)
 
   /** delete by ids or filter (client.py:396-429). */
   def delete(ids: Seq[String] = Nil, where: Option[Filter] = None): Unit = {
-    val remaining = (ids, where) match {
-      case (Nil, None) => df.limit(0)
-      case (is, None) => df.where(!col("id").isin(is: _*))
-      case (Nil, Some(f)) => Crud.deleteByFilter(df, f)
-      case (is, Some(f)) =>
-        df.where(!(col("id").isin(is: _*) || coalesce(f.compile, lit(false))))
+    val hit = (ids, where) match {
+      case (Nil, None) => None
+      case (is, None) => Some(col("id").isin(is: _*))
+      case (Nil, Some(f)) => Some(coalesce(f.compile, lit(false)))
+      case (is, Some(f)) => Some(col("id").isin(is: _*) || coalesce(f.compile, lit(false)))
     }
-    val removed = df.join(remaining.select("id"), Seq("id"), "left_anti")
-    write(remaining) {
-      indexRemove(removed.select("id"))
-      packedRemove(removed.select("id"))
+    val stored = df
+    write(stored.schema) { _ =>
+      hit match {
+        case None => Delta(None, Nil, truncate = true)
+        case Some(p) =>
+          val live = liveLengths(stored.where(p))
+          Delta(None, live.map(_._1).distinct, removedTotals(live))
+      }
+    } { d =>
+      import spark.implicits._
+      packedRemove(if (d.truncate) stored.select("id") else d.dead.toDF("id"))
     }
   }
 
@@ -549,7 +616,7 @@ final class GraftCollection(spark: SparkSession, dir: String,
     * mirroring [[hybridQuery]]'s index reuse. */
   def keywords(topK: Int = 5): DataFrame = {
     val idx =
-      if (hasKeywordIndex) Bm25.loadIndex(spark, indexDir)
+      if (hasKeywordIndex) keywordIndex
       else Bm25.buildIndex(df.where(col("document").isNotNull), "id", "document")
     val out = Bm25.tfidfKeywords(idx, topK)
     // release the on-the-fly index once the keyword table has
@@ -747,49 +814,86 @@ final class GraftCollection(spark: SparkSession, dir: String,
     val storedPlus = incoming.schema.fields
       .filterNot(f => stored.columns.contains(f.name))
       .foldLeft(stored)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
-    val incomingPlus = stored.schema.fields
-      .filterNot(f => incoming.columns.contains(f.name))
-      .foldLeft(incoming)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
+    // a stored column keeps its type: every generation is read with the
+    // one committed schema
+    val incomingPlus = stored.schema.fields.foldLeft(incoming) { (d, f) =>
+      if (!incoming.columns.contains(f.name)) d.withColumn(f.name, lit(null).cast(f.dataType))
+      else if (incoming.schema(f.name).dataType != f.dataType)
+        d.withColumn(f.name, col(f.name).cast(f.dataType))
+      else d
+    }
     (storedPlus, incomingPlus)
   }
 
-  /** Rewrite the data dir via temp-dir + rename swap (the plan reads the
-    * same files it replaces — Collections.swapWrite). `maintain` runs
-    * AFTER the new data is staged but BEFORE the swap, so index-delta
-    * plans that read the OLD data dir still can — that includes the
-    * resident packed-index deltas ([[packedAppend]]/[[packedReplace]]/
-    * [[packedRemove]]), which materialize eagerly. A mutation whose
-    * maintain block did NOT delta the packed index releases it (the
-    * resident matrix would no longer reflect the data). */
-  private def write(result: DataFrame)(maintain: => Unit = ()): Unit = {
-    import org.apache.hadoop.fs.Path
-    val tmpPath = new Path(s"$dir/data_tmp")
-    val dataPath = new Path(s"$dir/data")
-    val oldPath = new Path(s"$dir/data_old")
-    // FileSystem of the TARGET path, not the default FS — the collection
-    // root may live on a non-default scheme (s3a://, hdfs://...).
-    val fs = dataPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** Write `rows` as data generation `gen`; returns them read back. */
+  private def appendGeneration(gen: Long, schema: org.apache.spark.sql.types.StructType,
+                               rows: DataFrame): DataFrame = {
+    val path = Collections.genDir(dataRoot, gen)
+    rows.withColumn(Collections.GenCol, lit(gen)).write.mode("overwrite").parquet(path)
+    Collections.readGenerations(spark, path, schema, Nil).drop(Collections.GenCol)
+  }
+
+  /** (id, keyword doc length — None for a null document) of live rows,
+    * collected in one job; lengths only when a keyword index needs them. */
+  private def liveLengths(rows: DataFrame): Seq[(String, Option[Int])] = {
+    val len =
+      if (hasKeywordIndex)
+        when(col("document").isNotNull, size(Bm25.tokenize(col("document"))))
+      else lit(null).cast("int")
+    rows.select(col("id"), len).collect()
+      .map(r => (r.getString(0), if (r.isNullAt(1)) None else Some(r.getInt(1)))).toSeq
+  }
+
+  private def removedTotals(live: Seq[(String, Option[Int])]): (Long, Long) =
+    (live.count(_._2.isDefined).toLong, live.flatMap(_._2).map(_.toLong).sum)
+
+  /** Commit one merge-on-read write. The steps, and what a fresh handle
+    * sees after a crash at each:
+    *  1. `stage` writes the generation's rows (`data/_g<gen>`); then the
+    *     tombstone file and the keyword-sidecar delta are written. None of
+    *     it is visible — the manifest does not list the generation, and
+    *     the sidecar accepts generations up to the manifest's `committed`
+    *     only. Old state.
+    *  2. `maintain` deltas the resident tiers: THIS handle's memory, so a
+    *     crash leaves nothing on disk. Old state.
+    *  3. The slab sidecars are dropped — a point-in-time snapshot any
+    *     mutation makes stale: dropped BEFORE the commit, a crash costs a
+    *     cold rebuild (lost warm start, correct results); dropped after,
+    *     new data would coexist with a stale sidecar a later session
+    *     warm-starts from. Old state. Re-save after bulk CRUD with
+    *     saveResidentIndex().
+    *  4. The mutation stamp is bumped, also before the commit: a crash
+    *     errs toward FALSE-stale (counter moved, data unchanged — a
+    *     spurious rebuild), never toward another handle serving stale
+    *     resident results undetected. Old state.
+    *  5. The manifest is written (tmp + rename): the commit point. New
+    *     state.
+    * The next write sweeps what a crashed one left; a generation number
+    * a crash left unused is simply skipped. Concurrent writers need an
+    * external coordinator, as before: the manifest is last-writer-wins. */
+  private def write(schema: org.apache.spark.sql.types.StructType)(
+      stage: Long => Delta)(maintain: Delta => Unit): Unit = {
+    val m = manifestOf(Collections.readManifest(dir))
+    Collections.sweepGenerations(dataRoot, tombDir, m.gens.map(_.gen).toSet)
+    val gen = (Collections.readMutationCount(spark, dir) +: m.committed +:
+      m.gens.map(_.gen)).max + 1
     packedMaintained = false
     graphMaintained = false
-    result.write.mode("overwrite").parquet(tmpPath.toString)
-    maintain
-    // the slab sidecar is a point-in-time snapshot of the data dir; any
-    // mutation makes it stale — drop it BEFORE the swap, so every crash
-    // window is consistent: crash after the drop = old data + a cold
-    // rebuild (lost warm start, correct results); dropping after the
-    // swap would leave a window where new data coexists with a stale
-    // sidecar a later session warm-starts from. Re-save after bulk CRUD
-    // with saveResidentIndex().
+    val d = stage(gen)
+    if (d.dead.nonEmpty)
+      Collections.writeIds(Collections.tombstonePath(tombDir, gen), d.dead)
+    if (hasKeywordIndex) keywordDelta(gen, d, m.committed)
+    writeStep("delta")
+    maintain(d)
+    writeStep("tiers")
     dropSlabSidecars()
-    // bump the collection's mutation counter BEFORE the swap, like the
-    // sidecar drop: every crash window then errs toward FALSE-stale
-    // (counter moved, data unchanged — a spurious rebuild), never toward
-    // another handle serving stale resident results undetected
+    writeStep("sidecar_drop")
     val stamp = Collections.bumpMutationCount(spark, dir)
-    fs.delete(oldPath, true) // leftover from a prior crashed swap, if any
-    if (fs.exists(dataPath)) fs.rename(dataPath, oldPath)
-    fs.rename(tmpPath, dataPath)
-    fs.delete(oldPath, true)
+    writeStep("stamp")
+    Collections.writeManifest(dir, m.copy(committed = gen, schema = schema.json,
+      gens = m.gens :+ Collections.Generation(gen, d.rows.isDefined,
+        d.dead.nonEmpty, d.truncate)))
+    writeStep("manifest")
     if (!packedMaintained) releasePackedIndex()
     else {
       // THIS handle's resident state was delta-maintained in the same
@@ -805,6 +909,10 @@ final class GraftCollection(spark: SparkSession, dir: String,
     if (graphMaintained) { if (packedGraphIdx.isDefined) packedGraphStamp = stamp }
     else { packedGraphIdx.foreach(_.unpersist()); packedGraphIdx = None }
   }
+
+  /** Called after each step of a write with the step's name (see
+    * [[write]]); a spec throws from it to stop a write at that step. */
+  @transient private[graft] var writeStep: String => Unit = _ => ()
 
   @transient private var packedMaintained = false
   @transient private var graphMaintained = false
@@ -1081,24 +1189,39 @@ final class GraftCollection(spark: SparkSession, dir: String,
   }
 
   /** One operational compaction pass over everything this collection
-    * owns: the data dir's small files, both persisted sidecars' hot
-    * buckets (keyword postings/doclen, dedup bands/shingles), and the
-    * resident packed indexes' generation chains. Query results are
-    * identical before and after — only file and slab layout change.
-    * Returns what was rewritten per relation. */
+    * owns: the data's delta generations, tombstones and small base files
+    * (folded into one base), the keyword sidecar's generations and hot
+    * buckets, the dedup sidecar's hot buckets, and the resident packed
+    * indexes' generation chains. Query results are identical before and
+    * after — only file and slab layout change. Returns what was rewritten
+    * per relation. */
   def optimize(maxFilesPerBucket: Int = 8): Map[String, Int] = {
-    val data = graft.sources.Collections.compactDir(
-      spark, s"$dir/data", maxFilesPerBucket)
-    // compaction rewrites the data FILES without bumping the mutation
-    // stamp (contents identical, so resident indexes stay valid) — but
-    // EVERY handle's cached relation now lists deleted files, so bump the
-    // layout stamp (foreign handles re-list on their next df access; the
-    // pre-stamp behavior only refreshed THIS handle and left a second
-    // handle to FileNotFound)
-    if (data) graft.sources.Collections.bumpLayoutStamp(spark, dir)
+    val raw = Collections.readManifest(dir)
+    val m = manifestOf(raw)
+    Collections.recoverSwap(dataRoot)
+    Collections.sweepGenerations(dataRoot, tombDir, m.gens.map(_.gen).toSet)
+    val baseFiles = {
+      val p = new org.apache.hadoop.fs.Path(dataRoot)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p)
+        .count(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
+    }
+    // the fold: generations, tombstones and small base files become one
+    // base file. It rewrites the FILES without bumping the mutation stamp
+    // (contents identical, so resident indexes stay valid); the manifest's
+    // layout counter moves instead, so every handle holding a listing of
+    // the deleted files re-lists. Folded rows keep `_gen`: until the
+    // manifest reset lands, the old history reads the folded base to the
+    // same rows.
+    val data = m.gens.nonEmpty || baseFiles > maxFilesPerBucket
+    if (data) {
+      Collections.swapWrite(liveRows(raw).coalesce(1), dataRoot)
+      Collections.writeManifest(dir, m.copy(layout = m.layout + 1, gens = Vector.empty))
+      Collections.deleteIfExists(tombDir)
+      tombCache.clear()
+    }
     dfCache = null
     val kw = if (hasKeywordIndex)
-      Bm25.compactIndex(spark, indexDir, maxFilesPerBucket) else 0
+      Bm25.compactIndex(spark, indexDir, maxFilesPerBucket, keep = _ <= m.committed) else 0
     val dd = if (hasDedupIndex)
       Dedup.compactDedupIndex(spark, dedupDir, maxFilesPerBucket) else 0
     compactPackedIndexes()
@@ -2096,28 +2219,37 @@ final class GraftCollection(spark: SparkSession, dir: String,
     try Bm25.saveIndex(idx, indexDir) finally idx.release()
   }
 
-  /** Append-only delta for freshly inserted docs — lands in the new
-    * docs' term buckets only. */
-  private def indexAppend(newRows: DataFrame): Unit = if (hasKeywordIndex) {
-    val (post, dlen) = Bm25.tokenizeDocs(
-      newRows.where(col("document").isNotNull).select("id", "document"),
-      "id", "document")
-    Bm25.appendDelta(indexDir, post, dlen)
+  /** The keyword sidecar's share of a write, committed as sidecar
+    * generation `gen`: the appended docs are tokenized once on the
+    * executors — the index's own tokenizer — and collected (a
+    * driver-sized batch), so postings, doc lengths and the stats change
+    * are built on the driver; replaced and deleted docs become sidecar
+    * tombstones. Sidecar generations past `committed` belong to a write
+    * that crashed before its commit and are dropped first. */
+  private def keywordDelta(gen: Long, d: Delta, committed: Long): Unit = {
+    import spark.implicits._
+    val docs = d.rows.toSeq.flatMap(_.where(col("document").isNotNull)
+      .select(col("id"), Bm25.tokenize(col("document"))).collect()
+      .map(r => (r.getString(0), r.getSeq[String](1))))
+    val appended =
+      if (docs.isEmpty) None
+      else Some((
+        docs.groupBy(_._1).toSeq.flatMap { case (id, ds) =>
+          ds.flatMap(_._2).groupBy(identity).map { case (t, ts) => (id, t, ts.size.toLong) }
+        }.toDF("doc_id", "term", "tf"),
+        docs.map { case (id, toks) => (id, toks.size) }.toDF("doc_id", "doc_len")))
+    Bm25.commitDelta(indexDir, gen, appended,
+      (docs.length.toLong, docs.map(_._2.size.toLong).sum),
+      d.dead, d.removed, d.truncate, keep = _ <= committed)
   }
 
-  /** Replace the postings of changed ids: anti-join out the old rows of
-    * the slim sidecars, append the re-tokenized replacements — unaffected
-    * documents are never re-tokenized. */
-  private def indexReplace(changedRows: DataFrame): Unit = if (hasKeywordIndex) {
-    val (post, dlen) = Bm25.tokenizeDocs(
-      changedRows.where(col("document").isNotNull).select("id", "document"),
-      "id", "document")
-    Bm25.replaceDelta(indexDir, changedRows.select("id"), post, dlen)
-  }
+  /** The persisted keyword index as this collection's readers see it. */
+  private[graft] def keywordIndex: Bm25.Index =
+    Bm25.loadIndex(spark, indexDir, keywordVisible)
 
-  private def indexRemove(removedIds: DataFrame): Unit = if (hasKeywordIndex) {
-    val empty = Bm25.tokenizeDocs(
-      df.select("id", "document").limit(0), "id", "document")
-    Bm25.replaceDelta(indexDir, removedIds, empty._1, empty._2)
+  /** The sidecar generations a reader may see: those the data committed. */
+  private def keywordVisible: Long => Boolean = {
+    val c = committedGen
+    _ <= c
   }
 }

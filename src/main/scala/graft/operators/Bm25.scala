@@ -52,11 +52,15 @@ object Bm25 {
     }
   }
 
-  /** Unpersist the RDD backing an eagerly localCheckpoint-ed frame. */
+  /** Free the blocks of the RDD backing an eagerly localCheckpoint-ed
+    * frame. `RDD.unpersist` would WARN that the lineage was truncated —
+    * on every release, though releasing a checkpoint nobody scores again
+    * is the intended lifecycle — so the blocks go through the context
+    * directly ([[org.apache.spark.sql.graft.Bridge.releaseBlocks]]). */
   private[operators] def releaseCheckpoint(df: DataFrame): Unit =
     df.queryExecution.logical match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
+        org.apache.spark.sql.graft.Bridge.releaseBlocks(lr.rdd)
       case _ => ()
     }
 
@@ -130,17 +134,26 @@ object Bm25 {
   /** The reference maintains its inverted index incrementally on
     * add/remove (hybrid_search.py:66-117) instead of re-indexing per
     * query. The batch analog: postings + doc-length relations persisted
-    * NEXT TO the collection (slim parquet sidecars) plus a stats.json, all
-    * maintained by the Crud algebra — hybridQuery then reads them instead
-    * of re-tokenizing the corpus on every call.
+    * NEXT TO the collection (slim parquet sidecars) plus a stats.json —
+    * hybridQuery then reads them instead of re-tokenizing the corpus on
+    * every call.
     *
-    * The postings sidecar is PARTITIONED BY a term-hash bucket `_tb` —
-    * the distributed analog of the reference's term-keyed dict
+    * The postings base is PARTITIONED BY a term-hash bucket `_tb` — the
+    * distributed analog of the reference's term-keyed dict
     * (hybrid_search.py:63-65): a query only reads the <= |query terms|
     * buckets its terms hash into, so the scan prunes to a fixed number of
-    * directories no matter how large the corpus vocabulary grows. New
-    * docs append into their terms' buckets; replace/delete is a
-    * copy-on-write rewrite preserving the layout. */
+    * directories no matter how large the corpus vocabulary grows.
+    *
+    * Maintenance is merge-on-read (see the generation layout in
+    * [[graft.sources.Collections]]): each delta appends its postings and
+    * doc lengths as a new generation and records replaced or deleted docs
+    * as tombstones, which [[loadIndex]] applies. No delta rewrites the
+    * base. stats.json is the sidecar's commit point: it lists the
+    * committed generations, each with its integer change to `n_docs` and
+    * `sum_doc_len`, so the two stats follow every delta without a rescan
+    * and `avg_doc_len = sum / n` stays bit-identical to `avg()` over the
+    * doc lengths (an average of integers sums exactly in double).
+    * [[compactIndex]] folds the generations back into the base. */
   def indexExists(dir: String): Boolean =
     ModelStore.pathExists(s"$dir/stats.json")
 
@@ -160,7 +173,30 @@ object Bm25 {
     (((h % buckets) + buckets) % buckets).toInt
   }
 
+  /** One committed sidecar generation and its change to the two stats. */
+  final case class Delta(gen: graft.sources.Collections.Generation,
+                         dDocs: Long, dLen: Long)
+
+  /** The committed sidecar state (stats.json). `nDocs`/`sumDocLen` count
+    * every listed generation. */
+  final case class Stats(nDocs: Long, sumDocLen: Long, termBuckets: Int,
+                         gens: Seq[Delta]) {
+    def avgDocLen: Double = if (nDocs == 0) 0.0 else sumDocLen.toDouble / nDocs
+    /** The stats as seen by a reader that accepts only some generations
+      * (a collection's sidecar accepts the generations its data
+      * committed). */
+    def view(visible: Long => Boolean): Stats = {
+      val (seen, hidden) = gens.partition(d => visible(d.gen.gen))
+      Stats(nDocs - hidden.map(_.dDocs).sum, sumDocLen - hidden.map(_.dLen).sum,
+        termBuckets, seen)
+    }
+  }
+
   def saveIndex(index: Index, dir: String, termBuckets: Int = 64): Unit = {
+    // no stats.json = no index: a crash mid-rebuild leaves the sidecar
+    // absent (readers index on the fly) rather than new relations under
+    // an old history's tombstones
+    graft.sources.Collections.deleteIfExists(s"$dir/stats.json")
     graft.sources.Collections.swapWrite(
       index.postings.withColumn("_tb", termBucket(termBuckets)(col("term")))
         // cluster rows by bucket BEFORE the partitioned write: without this
@@ -170,89 +206,190 @@ object Bm25 {
         .repartition(col("_tb")),
       s"$dir/postings", partitionCols = Seq("_tb"))
     graft.sources.Collections.swapWrite(index.docLengths, s"$dir/doclen")
-    writeStats(dir, index.nDocs, index.avgDocLen, termBuckets)
+    graft.sources.Collections.deleteIfExists(s"$dir/tombstones")
+    // avg = fl(S/n), so fl(avg·n) is within S·2^-52 of S: exact after
+    // rounding for any S < 2^51
+    writeStats(dir, Stats(index.nDocs, math.round(index.avgDocLen * index.nDocs),
+      termBuckets, Nil))
   }
 
-  def writeStats(dir: String, nDocs: Long, avgDocLen: Double,
-                 termBuckets: Int): Unit =
+  def writeStats(dir: String, st: Stats): Unit =
     // tmp + rename inside writeString: a crash mid-write never leaves a
     // torn stats.json (same stance as Collections.swapWrite); scheme-aware
     // so the sidecar follows the postings onto s3a/hdfs
     ModelStore.writeString(s"$dir/stats.json",
-      s"""{"n_docs": $nDocs, "avg_doc_len": $avgDocLen, "term_buckets": $termBuckets}""")
+      s"""{"n_docs": ${st.nDocs}, "sum_doc_len": ${st.sumDocLen}, """ +
+        s""""avg_doc_len": ${st.avgDocLen}, "term_buckets": ${st.termBuckets}, """ +
+        s""""gens": "${st.gens.map(d => s"${d.gen.gen}:${d.dDocs}:${d.dLen}:${d.gen.flags}").mkString(",")}"}""")
 
-  private def statsField(dir: String, k: String): String = {
+  def readStats(dir: String): Stats = {
     val raw = ModelStore.readString(s"$dir/stats.json")
-    (s""""$k"\\s*:\\s*([-0-9.eE]+)""").r.findFirstMatchIn(raw).map(_.group(1))
+    def field(k: String): Option[String] =
+      (s""""$k"\\s*:\\s*([-0-9.eE]+)""").r.findFirstMatchIn(raw).map(_.group(1))
+    def need(k: String) = field(k)
       .getOrElse(throw new IllegalArgumentException(s"missing $k in index stats"))
+    val n = need("n_docs").toLong
+    Stats(n,
+      // stats written before deltas carry only the average
+      field("sum_doc_len").map(_.toLong)
+        .getOrElse(math.round(need("avg_doc_len").toDouble * n)),
+      need("term_buckets").toInt,
+      """"gens"\s*:\s*"([^"]*)"""".r.findFirstMatchIn(raw).toSeq
+        .flatMap(_.group(1).split(",")).filter(_.nonEmpty).map { e =>
+        val f = e.split(":", -1)
+        Delta(graft.sources.Collections.Generation.parse(f(0).toLong, f(3)),
+          f(1).toLong, f(2).toLong)
+      })
   }
 
-  /** Bucket count of a persisted index (from stats.json). */
-  def indexTermBuckets(dir: String): Int = statsField(dir, "term_buckets").toInt
+  private def tombDir(dir: String) = s"$dir/tombstones"
 
-  def loadIndex(spark: org.apache.spark.sql.SparkSession, dir: String): Index =
-    Index(spark.read.parquet(s"$dir/postings"),
-      spark.read.parquet(s"$dir/doclen"),
-      statsField(dir, "n_docs").toLong, statsField(dir, "avg_doc_len").toDouble,
-      termBuckets = indexTermBuckets(dir))
-
-  /** Append-only delta for freshly indexed docs: postings land in their
-    * terms' `_tb` partition directories, doc lengths append, stats
-    * refresh. Touches only the new docs' buckets. */
-  def appendDelta(dir: String, postings: DataFrame, docLengths: DataFrame): Unit = {
-    val buckets = indexTermBuckets(dir)
-    postings.withColumn("_tb", termBucket(buckets)(col("term")))
-      .repartition(col("_tb"))
-      .write.mode("append").partitionBy("_tb").parquet(s"$dir/postings")
-    docLengths.write.mode("append").parquet(s"$dir/doclen")
-    refreshStats(docLengths.sparkSession, dir)
+  /** The sidecar's live postings and doc lengths under a generation
+    * history, `_gen` kept (dropped by [[loadIndex]], folded by
+    * [[compactIndex]]). With no generations these are today's plain
+    * reads of the two bases. */
+  private def liveRelations(spark: org.apache.spark.sql.SparkSession, dir: String,
+                            gens: Seq[Delta]): (DataFrame, DataFrame) = {
+    import graft.sources.Collections
+    Collections.recoverSwap(s"$dir/postings")
+    Collections.recoverSwap(s"$dir/doclen")
+    val postings0 = spark.read.parquet(s"$dir/postings")
+    val doclen0 = spark.read.parquet(s"$dir/doclen")
+    if (gens.isEmpty) (postings0, doclen0)
+    else {
+      val history = gens.map(d => d.gen -> (if (d.gen.tombstones)
+        Collections.readIds(Collections.tombstonePath(tombDir(dir), d.gen.gen)) else Nil))
+      val rowGens = gens.collect { case d if d.gen.rows => d.gen.gen }
+      // postings generations are flat (`_tb` is a column there): a
+      // partitioned base and partitioned generations cannot share a scan
+      val postingsGens = Collections.readGenerations(spark, s"$dir/postings",
+        org.apache.spark.sql.types.StructType(postings0.schema
+          .filterNot(_.name == Collections.GenCol)),
+        rowGens, withBase = false)
+      (Collections.liveRows(
+         postings0.unionByName(postingsGens, allowMissingColumns = true), "doc_id", history),
+       Collections.liveRows(Collections.readGenerations(spark, s"$dir/doclen",
+         doclen0.schema, rowGens), "doc_id", history))
+    }
   }
 
-  /** Small-file compaction for an append-maintained index: rewrite
-    * postings buckets holding more than `maxFilesPerBucket` parquet files
-    * (per-bucket atomic swap, cold buckets untouched) and the flat doclen
-    * dir past the same threshold. Scores are identical before and after —
-    * only the file layout changes. Returns the number of relations
-    * rewritten (bucket count + 0/1 for doclen). */
-  def compactIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-                   maxFilesPerBucket: Int = 8): Int = {
-    require(indexExists(dir), s"no BM25 index at $dir")
-    graft.sources.Collections.compactBuckets(
-      spark, s"$dir/postings", maxFilesPerBucket) +
-      (if (graft.sources.Collections.compactDir(
-        spark, s"$dir/doclen", maxFilesPerBucket)) 1 else 0)
+  /** Load a persisted index. `visible` selects the generations this
+    * reader accepts — all of them by default; a collection passes the
+    * generations its data committed, so a delta written by a crashed
+    * write is never read. */
+  def loadIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
+                visible: Long => Boolean = _ => true): Index = {
+    val st = readStats(dir).view(visible)
+    val (postings, docLengths) = liveRelations(spark, dir, st.gens)
+    Index(postings.drop(graft.sources.Collections.GenCol),
+      docLengths.drop(graft.sources.Collections.GenCol),
+      st.nDocs, st.avgDocLen, termBuckets = st.termBuckets)
   }
 
-  /** Replace the postings/lengths of changed ids: anti-join out the old
-    * rows, append the re-tokenized replacements — unaffected documents are
-    * never re-tokenized (copy-on-write rewrite preserving the bucket
-    * layout). Pass empty deltas for pure deletion. */
+  /** Drop the generations `keep` rejects — the uncommitted deltas of a
+    * crashed write — from stats.json and from disk. Returns the kept
+    * state. */
+  def dropGens(dir: String, keep: Long => Boolean): Stats = {
+    val st0 = readStats(dir)
+    val st = st0.view(keep)
+    if (st.gens.length != st0.gens.length) writeStats(dir, st)
+    val listed = st.gens.map(_.gen.gen).toSet
+    Seq("postings", "doclen").foreach(r =>
+      graft.sources.Collections.sweepGenerations(s"$dir/$r", tombDir(dir), listed))
+    st
+  }
+
+  /** Commit one delta generation: the appended docs' postings and doc
+    * lengths (None for a pure deletion), tombstones for the replaced or
+    * deleted doc ids, and the stats change — `added` and `removed` are
+    * (docs, summed doc length) of the appended and the tombstoned live
+    * docs. `truncate` hides every earlier generation instead. Generations
+    * `keep` rejects are dropped first. Touches only the delta: no base
+    * file is read or rewritten. */
+  def commitDelta(dir: String, gen: Long, appended: Option[(DataFrame, DataFrame)],
+                  added: (Long, Long), tombstones: Seq[Any], removed: (Long, Long),
+                  truncate: Boolean = false, keep: Long => Boolean = _ => true): Unit = {
+    import graft.sources.Collections
+    val st = dropGens(dir, keep)
+    require(st.gens.forall(_.gen.gen < gen),
+      s"sidecar generation $gen is not newer than ${st.gens.map(_.gen.gen).max}")
+    appended.foreach { case (postings, docLengths) =>
+      // driver-sized deltas: one task, one file per generation
+      postings.withColumn("_tb", termBucket(st.termBuckets)(col("term")))
+        .withColumn(Collections.GenCol, lit(gen)).coalesce(1)
+        .write.mode("overwrite").parquet(Collections.genDir(s"$dir/postings", gen))
+      docLengths.withColumn(Collections.GenCol, lit(gen)).coalesce(1)
+        .write.mode("overwrite").parquet(Collections.genDir(s"$dir/doclen", gen))
+    }
+    if (tombstones.nonEmpty)
+      Collections.writeIds(Collections.tombstonePath(tombDir(dir), gen), tombstones)
+    val (dn, dl) =
+      if (truncate) (added._1 - st.nDocs, added._2 - st.sumDocLen)
+      else (added._1 - removed._1, added._2 - removed._2)
+    writeStats(dir, Stats(st.nDocs + dn, st.sumDocLen + dl, st.termBuckets,
+      st.gens :+ Delta(Collections.Generation(gen, appended.isDefined,
+        tombstones.nonEmpty, truncate), dn, dl)))
+  }
+
+  /** (docs, summed doc length) of a doc-length relation: one job. */
+  private def lengthTotals(docLengths: DataFrame): (Long, Long) = {
+    val r = docLengths.agg(count(lit(1)), coalesce(sum(col("doc_len")), lit(0L))).head()
+    (r.getLong(0), r.getLong(1))
+  }
+
+  private def nextGen(dir: String): Long =
+    (0L +: readStats(dir).gens.map(_.gen.gen)).max + 1
+
+  /** Append-only delta for freshly indexed docs (standalone sidecars; a
+    * collection commits through [[commitDelta]] at its own generation). */
+  def appendDelta(dir: String, postings: DataFrame, docLengths: DataFrame): Unit =
+    commitDelta(dir, nextGen(dir), Some((postings, docLengths)),
+      lengthTotals(docLengths), Nil, (0L, 0L))
+
+  /** Replace the postings/lengths of changed ids: tombstone the old docs
+    * and append the re-tokenized replacements in one generation —
+    * unaffected documents are never re-tokenized or rewritten. Pass empty
+    * deltas for pure deletion. */
   def replaceDelta(dir: String, changedIds: DataFrame,
                    postings: DataFrame, docLengths: DataFrame): Unit = {
     val spark = changedIds.sparkSession
-    val buckets = indexTermBuckets(dir)
-    val keyed = changedIds.select(col(changedIds.columns.head).as("doc_id"))
-    val fresh = postings.withColumn("_tb", termBucket(buckets)(col("term")))
-    graft.sources.Collections.swapWrite(
-      spark.read.parquet(s"$dir/postings")
-        .join(keyed, Seq("doc_id"), "left_anti").unionByName(fresh)
-        .repartition(col("_tb")),
-      s"$dir/postings", partitionCols = Seq("_tb"))
-    graft.sources.Collections.swapWrite(
-      spark.read.parquet(s"$dir/doclen")
-        .join(keyed, Seq("doc_id"), "left_anti").unionByName(docLengths),
-      s"$dir/doclen")
-    refreshStats(spark, dir)
+    val ids = changedIds.collect().map(_.get(0)).distinct.toSeq
+    val removed = lengthTotals(
+      loadIndex(spark, dir).docLengths.where(col("doc_id").isin(ids: _*)))
+    commitDelta(dir, nextGen(dir), Some((postings, docLengths)),
+      lengthTotals(docLengths), ids, removed)
   }
 
-  /** Recompute the two scalar stats from the persisted doc lengths,
-    * preserving the bucket count. */
-  def refreshStats(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    val buckets = indexTermBuckets(dir)
-    val st = spark.read.parquet(s"$dir/doclen")
-      .agg(count(lit(1)), avg(col("doc_len"))).head()
-    writeStats(dir, st.getLong(0),
-      if (st.isNullAt(1)) 0.0 else st.getDouble(1), buckets)
+  /** Compaction for a delta-maintained index: fold the generations and
+    * tombstones `keep` accepts into one rewrite of each base, then
+    * rewrite postings buckets holding more than `maxFilesPerBucket`
+    * parquet files (per-bucket atomic swap, cold buckets untouched) and
+    * the flat doclen dir past the same threshold. Scores are identical
+    * before and after — only the file layout changes. Returns the number
+    * of relations rewritten (buckets, plus 1 per folded or compacted
+    * flat relation).
+    *
+    * The fold swaps each base, then resets stats.json. Folded rows keep
+    * their `_gen`, so a crash between the steps leaves a state the old
+    * history still reads correctly (see [[graft.sources.Collections]]). */
+  def compactIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
+                   maxFilesPerBucket: Int = 8, keep: Long => Boolean = _ => true): Int = {
+    import graft.sources.Collections
+    require(indexExists(dir), s"no BM25 index at $dir")
+    val st = dropGens(dir, keep)
+    val folded =
+      if (st.gens.isEmpty) 0
+      else {
+        val (postings, docLengths) = liveRelations(spark, dir, st.gens)
+        Collections.swapWrite(postings.repartition(col("_tb")), s"$dir/postings",
+          partitionCols = Seq("_tb"))
+        Collections.swapWrite(docLengths.coalesce(1), s"$dir/doclen")
+        writeStats(dir, st.copy(gens = Nil))
+        Collections.deleteIfExists(tombDir(dir))
+        2
+      }
+    folded + Collections.compactBuckets(spark, s"$dir/postings", maxFilesPerBucket) +
+      (if (Collections.compactDir(spark, s"$dir/doclen", maxFilesPerBucket)) 1 else 0)
   }
 
   /** Restrict an index to the given doc ids (the pre-filtered hybrid

@@ -99,16 +99,15 @@ object Collections {
 
   private def configPath(dir: String) = s"$dir/config.json"
 
-  def save(df: DataFrame, dir: String, config: Config,
-           mode: String = "overwrite"): Unit = {
-    df.write.mode(mode).parquet(s"$dir/data")
+  /** Create (or reset) a collection: `df` as its base, the config, and a
+    * manifest with no generations. */
+  def save(df: DataFrame, dir: String, config: Config): Unit = {
+    df.write.mode("overwrite").parquet(s"$dir/data")
     val json =
       s"""{"name": "${config.name}", "dimensions": ${config.dimensions}, "metric": "${config.metric}", "embedder": "${config.embedder}"}"""
     writeString(configPath(dir), json)
+    writeManifest(dir, Manifest(0L, 0L, df.schema.json, Vector.empty))
   }
-
-  def load(spark: SparkSession, dir: String): (DataFrame, Config) =
-    (spark.read.parquet(s"$dir/data"), loadConfig(dir))
 
   def loadConfig(dir: String): Config = {
     val raw = readString(configPath(dir))
@@ -147,21 +146,6 @@ object Collections {
   def bumpMutationCount(spark: SparkSession, dir: String): Long =
     bumpCounter(spark, s"$dir/_mutations")
 
-  /** Monotonic per-collection LAYOUT stamp (`$dir/_layout`): bumped when
-    * compaction swap-rewrites the data directory's FILES without changing
-    * its CONTENTS (optimize()'s small-file fold). The mutation counter
-    * deliberately does not move — resident indexes built from the old
-    * files stay valid — but any handle's cached relation (its parquet
-    * file listing) is now pointing at deleted files; a second handle over
-    * the same dir would FileNotFound on its next query without this
-    * stamp. Relation caches key on (mutation, layout); everything else
-    * keys on the mutation count alone. */
-  def readLayoutStamp(spark: SparkSession, dir: String): Long =
-    readCounter(spark, s"$dir/_layout")
-
-  def bumpLayoutStamp(spark: SparkSession, dir: String): Long =
-    bumpCounter(spark, s"$dir/_layout")
-
   private def readCounter(spark: SparkSession, path: String): Long = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -192,7 +176,10 @@ object Collections {
     * when the plan READS the same files it replaces. Swap order keeps
     * every crash window recoverable: the previous dir is renamed aside
     * (not deleted) before the new one moves in, and only deleted once the
-    * swap has succeeded. */
+    * swap has succeeded. A crash between the two renames leaves `dir`
+    * missing and `${dir}_old` holding the only committed copy;
+    * [[recoverSwap]] renames it back, here and before every read of a
+    * swapped relation. */
   def swapWrite(result: DataFrame, dir: String,
                 partitionCols: Seq[String] = Nil,
                 format: String = "parquet"): Unit = {
@@ -204,6 +191,7 @@ object Collections {
     // FileSystem of the TARGET path, not the default FS — the dir may
     // live on a non-default scheme (s3a://, hdfs://...).
     val fs = dataPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    recoverSwap(dir)
     val w = result.write.mode("overwrite")
     val pw = if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w
     format match {
@@ -217,6 +205,184 @@ object Collections {
     fs.rename(tmpPath, dataPath)
     fs.delete(oldPath, true)
   }
+
+  /** Recovery sweep for a [[swapWrite]] that crashed between its two
+    * renames (the [[compactBuckets]] stance): if `dir` is missing and
+    * `${dir}_old` exists, the old copy is the committed one — rename it
+    * back. Idempotent; a no-op when `dir` exists. */
+  def recoverSwap(dir: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val old = new org.apache.hadoop.fs.Path(s"${dir}_old")
+    val fs = fsOf(p)
+    if (!fs.exists(p) && fs.exists(old)) fs.rename(old, p)
+  }
+
+  // ---------------------------------------- merge-on-read delta generations
+  //
+  // A generational relation rooted at R is a BASE — parquet files directly
+  // under R, the layout every relation had before deltas — plus committed
+  // delta GENERATIONS in `R/_g<gen>/`. Spark's file listing skips
+  // `_`-prefixed names, so a plain read of R sees the base alone, and a
+  // generation nobody committed is never read. Generation rows carry a
+  // physical `_gen` column; base rows read it as null (= generation 0).
+  // A tombstone (id, gen) hides the rows of that id from EARLIER
+  // generations only, so an upsert — tombstone plus append at one
+  // generation — keeps its own new row. A truncating generation hides
+  // every earlier generation. A fold rewrites the live rows with their
+  // `_gen` kept, so re-applying a folded history hides nothing new: a
+  // reader that still holds the pre-fold history reads the same rows.
+
+  val GenCol = "_gen"
+
+  def genDir(root: String, gen: Long): String = s"$root/_g$gen"
+
+  /** One committed generation: whether it appended rows, wrote a
+    * tombstone file, or truncated everything before it. */
+  final case class Generation(gen: Long, rows: Boolean, tombstones: Boolean,
+                              truncate: Boolean = false) {
+    def flags: String =
+      (if (rows) "r" else "") + (if (tombstones) "t" else "") + (if (truncate) "x" else "")
+  }
+
+  object Generation {
+    def parse(gen: Long, flags: String): Generation =
+      Generation(gen, flags.contains('r'), flags.contains('t'), flags.contains('x'))
+  }
+
+  /** Tombstone file of generation `gen` under a relation's tombstone dir. */
+  def tombstonePath(tombDir: String, gen: Long): String = s"$tombDir/$gen"
+
+  /** Write a tombstone id set: a type tag, then length-prefixed UTF-8
+    * values (ids are arbitrary strings; no separator is safe). Written
+    * before the commit that lists it, so a torn file is never read. */
+  def writeIds(path: String, ids: Seq[Any]): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val out = new java.io.DataOutputStream(fsOf(p).create(p, true))
+    try {
+      out.writeUTF(ids.headOption match {
+        case Some(_: Long) => "long"
+        case Some(_: Int) => "int"
+        case _ => "string"
+      })
+      out.writeInt(ids.length)
+      ids.foreach { id =>
+        val b = id.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+        out.writeInt(b.length); out.write(b)
+      }
+    } finally out.close()
+  }
+
+  def readIds(path: String): Seq[Any] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val in = new java.io.DataInputStream(fsOf(p).open(p))
+    try {
+      val parse: String => Any = in.readUTF() match {
+        case "long" => _.toLong
+        case "int" => _.toInt
+        case _ => identity
+      }
+      Vector.fill(in.readInt()) {
+        val b = new Array[Byte](in.readInt())
+        in.readFully(b)
+        parse(new String(b, java.nio.charset.StandardCharsets.UTF_8))
+      }
+    } finally in.close()
+  }
+
+  /** Read a generational relation: the base (when `withBase`) and the
+    * given generations, as ONE scan with the given data schema plus
+    * `_gen`. A listed generation whose dir is gone was folded into the
+    * base by a fold that crashed before it reset the history — its rows
+    * are in the base with their `_gen` kept — so it is skipped. */
+  def readGenerations(spark: SparkSession, root: String,
+                      schema: org.apache.spark.sql.types.StructType,
+                      gens: Seq[Long], withBase: Boolean = true): DataFrame = {
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val fs = fsOf(new org.apache.hadoop.fs.Path(root))
+    val dirs = gens.map(genDir(root, _))
+      .filter(d => fs.exists(new org.apache.hadoop.fs.Path(d)))
+    spark.read
+      .schema(StructType(schema.filterNot(_.name == GenCol) :+
+        StructField(GenCol, LongType)))
+      .parquet((if (withBase) root +: dirs else dirs): _*)
+  }
+
+  /** Apply a generation history's truncations and tombstones to rows
+    * carrying `_gen`. One conjunct per distinct latest-tombstone
+    * generation: ids sharing it form one IN set, which Catalyst turns
+    * into a hash set. No rows are hidden by an empty history, and no
+    * Spark job runs — the tombstones are driver-held literals. */
+  def liveRows(rows: DataFrame, idCol: String,
+               history: Seq[(Generation, Seq[Any])]): DataFrame = {
+    val gen = coalesce(col(GenCol), lit(0L))
+    val cut = history.collect { case (g, _) if g.truncate => g.gen }
+      .foldLeft(0L)(math.max)
+    val latest = scala.collection.mutable.HashMap[Any, Long]()
+    for ((g, ids) <- history if g.gen > cut; id <- ids)
+      latest(id) = math.max(latest.getOrElse(id, 0L), g.gen)
+    val hides = latest.groupBy(_._2).toSeq.sortBy(_._1).map { case (g, m) =>
+      coalesce(col(idCol).isin(m.keys.toSeq: _*) && gen < g, lit(false))
+    }
+    val keep = (if (cut > 0) Seq(gen >= cut) else Nil) ++ hides.map(!_)
+    if (keep.isEmpty) rows else rows.where(keep.reduce(_ && _))
+  }
+
+  /** Delete every `_g<gen>` dir under `root` and every tombstone file
+    * under `tombDir` whose generation `committed` rejects: the leftovers
+    * of a write that crashed before its commit. */
+  def sweepGenerations(root: String, tombDir: String,
+                       committed: Long => Boolean): Unit = {
+    val gen = "_g([0-9]+)".r
+    for (d <- Seq(root, tombDir)) {
+      val p = new org.apache.hadoop.fs.Path(d)
+      val fs = fsOf(p)
+      if (fs.exists(p)) fs.listStatus(p).foreach { s =>
+        val g = s.getPath.getName match {
+          case gen(n) if d == root => Some(n.toLong)
+          case n if d == tombDir && n.forall(_.isDigit) => Some(n.toLong)
+          case _ => None
+        }
+        if (g.exists(!committed(_))) fs.delete(s.getPath, true)
+      }
+    }
+  }
+
+  /** The commit point of a collection's merge-on-read data (`_manifest`):
+    * the data schema, the committed generations, the last committed write
+    * generation (`committed`, which keyword-sidecar generations are
+    * checked against), and a layout counter that every fold bumps so
+    * handles holding a file listing re-list. Data files no manifest lists
+    * are invisible. Line format, written tmp + rename. */
+  final case class Manifest(layout: Long, committed: Long, schema: String,
+                            gens: Vector[Generation]) {
+    def render: String =
+      (Seq(s"layout $layout", s"committed $committed", s"schema $schema") ++
+        gens.map(g => s"gen ${g.gen} ${g.flags}")).mkString("", "\n", "\n")
+  }
+
+  object Manifest {
+    def parse(raw: String): Manifest = {
+      val lines = raw.split("\n").toSeq.filter(_.nonEmpty)
+        .map { l => val i = l.indexOf(' '); (l.take(i), l.drop(i + 1)) }
+      def one(k: String) = lines.collectFirst { case (`k`, v) => v }
+        .getOrElse(throw new IllegalArgumentException(s"manifest lacks '$k'"))
+      Manifest(one("layout").toLong, one("committed").toLong, one("schema"),
+        lines.collect { case ("gen", v) =>
+          val f = v.split(" ")
+          Generation.parse(f(0).toLong, if (f.length > 1) f(1) else "")
+        }.toVector)
+    }
+  }
+
+  private def manifestPath(dir: String) = s"$dir/_manifest"
+
+  /** The raw committed manifest, or None for a collection written before
+    * manifests (a bare `data/` base). */
+  def readManifest(dir: String): Option[String] =
+    if (pathExists(manifestPath(dir))) Some(readString(manifestPath(dir))) else None
+
+  def writeManifest(dir: String, m: Manifest): Unit =
+    writeString(manifestPath(dir), m.render)
 
   /** Small-file compaction for an append-maintained bucket-partitioned
     * sidecar (`root/_xx=K/part-*.parquet`). Every incremental append

@@ -47,4 +47,10 @@ object Bridge {
       case s: org.apache.spark.sql.classic.SparkSession =>
         s.sessionState.functionRegistry
     }
+
+  /** Free an RDD's cached blocks. `RDD.unpersist` WARNs on every locally
+    * checkpointed RDD that its lineage cannot recompute afterwards;
+    * graft releases such RDDs only once nothing reads them again. */
+  def releaseBlocks(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 }

@@ -163,7 +163,7 @@ class Bm25Spec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(gotAll.keySet === memAll.keySet)
     gotAll.foreach { case (k, v) => assert(math.abs(v - memAll(k)) < 1e-12) }
-    // copy-on-write replace: change doc 3 so it now matches the query
+    // replace: tombstone doc 3 and append its new text, which now matches
     val ch = Seq((3L, "ducks spark data lakes")).toDF("doc_id", "text")
     val (p3, l3) = Bm25.tokenizeDocs(ch, "doc_id", "text")
     Bm25.replaceDelta(dir, ch.select("doc_id"), p3, l3)
