@@ -828,9 +828,10 @@ final class GraftCollection(spark: SparkSession, dir: String,
   /** Write `rows` as data generation `gen`; returns them read back. */
   private def appendGeneration(gen: Long, schema: org.apache.spark.sql.types.StructType,
                                rows: DataFrame): DataFrame = {
-    val path = Collections.genDir(dataRoot, gen)
-    rows.withColumn(Collections.GenCol, lit(gen)).write.mode("overwrite").parquet(path)
-    Collections.readGenerations(spark, path, schema, Nil).drop(Collections.GenCol)
+    rows.withColumn(Collections.GenCol, lit(gen)).write.mode("overwrite")
+      .parquet(Collections.genDir(dataRoot, gen))
+    Collections.readGenerations(spark, dataRoot, schema, Seq(gen), withBase = false)
+      .drop(Collections.GenCol)
   }
 
   /** (id, keyword doc length — None for a null document) of live rows,

@@ -502,109 +502,33 @@ object Dedup {
     * the component's MIN node in O(log n) rounds — where min-label
     * propagation needs O(component diameter) rounds, so a chain-shaped
     * component at corpus scale would mean hundreds of blocking jobs.
-    * Both steps are plain groupBy-min + self-join on the candidate-pair
-    * relation (docs in >= 1 pair, a sliver of the corpus); each round's
-    * result is localCheckpoint-ed so plans stay constant-size. Fixpoint
-    * detection is two-tier: every round's checkpoint action carries an
-    * observe() fingerprint (edge count + bit_xor of xxhash64(u,v) — an
-    * exact, order-independent set signature, so equal sets can NEVER
-    * fingerprint unequal), and only a fingerprint MATCH triggers the
-    * authoritative limit(1)-bounded symmetric-difference probe. Changed
-    * rounds — every round but the last — therefore pay zero extra jobs;
-    * the probe job runs once, at convergence (plus once per 2^-64-rare
-    * xor collision, where it correctly reports "changed" and the loop
-    * continues — correctness never rests on the fingerprint).
     *
-    * Returns (doc_id, cluster_id) for every doc in >= 1 pair; cluster_id =
-    * min doc id of the component (the deterministic keeper, matching
-    * [[exact]]'s keeper_id convention). */
+    * Scale shape: the docs in >= 1 pair (a sliver of the corpus) are
+    * dictionary-encoded ONCE to ints in id order ([[ResidentGraph]], one
+    * sampling job); each round is three exchanges of packed int pairs
+    * with no Catalyst plan, and ONE job: the round's output is compared
+    * with its input range by range — both sorted over the same ranges —
+    * so the fixpoint test is exact and costs nothing extra. `maxIters`
+    * fails loud instead of returning partially-contracted labels.
+    *
+    * Returns (doc_id, cluster_id) for every doc in >= 1 pair (self-pairs
+    * included); cluster_id = min doc id of the component (the
+    * deterministic keeper, matching [[exact]]'s keeper_id convention). */
   def duplicateClusters(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
                         maxIters: Int = 50): DataFrame =
     duplicateClustersWithRounds(pairs, idA, idB, maxIters)._1
 
   /** [[duplicateClusters]] plus the number of large-star/small-star rounds
-    * it took to converge (exposed for the O(log n) convergence tests). */
+    * it took to converge, the fixpoint round included (exposed for the
+    * O(log n) convergence tests). */
   private[graft] def duplicateClustersWithRounds(
       pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
-      maxIters: Int = 50): (DataFrame, Int) = {
-    val p = pairs.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-
-    // One large-star + small-star round over edges oriented (u > v).
-    // large-star: every neighbor v > u re-points to min(N(u) ∪ {u});
-    // small-star: every neighbor v <= u re-points to min(N(u) ∪ {u}).
-    // Orientation is preserved by construction (the new target is the
-    // local min), so no re-canonicalization pass is needed.
-    def round(edges: DataFrame): DataFrame = {
-      val nbrs = edges.unionByName(edges.select(col("v").as("u"), col("u").as("v")))
-      val largeMin = nbrs.groupBy("u").agg(min("v").as("_m"))
-        .select(col("u"), least(col("u"), col("_m")).as("_m"))
-      // NO mid-round distinct (r14, guide §2.4): `large` holds exactly one
-      // row per undirected edge (nbrs carries each edge in both
-      // orientations and v > u keeps one), so the join cannot fan out, the
-      // small-star min is unchanged by duplicate (u,v) targets, and the
-      // round's OWN trailing distinct dedups the output — the old distinct
-      // here bought nothing but a full (u,v)-keyed exchange. Bonus: large
-      // now flows from the largeMin join partitioned by the same key its
-      // groupBy and the small-star join need.
-      val large = nbrs.join(largeMin, "u")
-        .where(col("v") > col("u"))
-        .select(col("v").as("u"), col("_m").as("v"))
-      // small-star input edges all have u > v, so min(N(u) ∪ {u}) = min(v)
-      val smallMin = large.groupBy("u").agg(min("v").as("_m"))
-      large.join(smallMin, "u")
-        .select(col("v").as("u"), col("_m").as("v"))
-        .where(col("u") =!= col("v"))
-        .unionByName(smallMin.select(col("u"), col("_m").as("v")))
-        .distinct()
+      maxIters: Int = 50): (DataFrame, Int) =
+    ResidentGraph.run { scope =>
+      val enc = ResidentGraph.encode(scope, pairs, idA, idB)
+      val (labels, rounds) = ResidentGraph.components(scope, enc, maxIters)
+      (ResidentGraph.labelFrame(enc, "doc_id", "cluster_id", labels), rounds)
     }
-
-    // (cnt, xor of xxhash64(u,v)): exact under set equality, order-free
-    def observed(df: DataFrame, name: String): (DataFrame, org.apache.spark.sql.Observation) = {
-      val o = org.apache.spark.sql.Observation(name)
-      (df.observe(o, count(lit(1)).as("cnt"),
-        coalesce(bit_xor(xxhash64(col("u"), col("v"))), lit(0L)).as("fp")), o)
-    }
-    def fingerprint(o: org.apache.spark.sql.Observation): (Long, Long) =
-      (o.get("cnt").asInstanceOf[Long], o.get("fp").asInstanceOf[Long])
-    val (e0, o0) = observed(
-      pairs
-        .select(greatest(col(idA), col(idB)).as("u"), least(col(idA), col(idB)).as("v"))
-        .where(col("u") =!= col("v"))
-        .distinct()
-        .repartition(p, col("u")),
-      "cc_init")
-    var edges = e0.localCheckpoint(eager = true)
-    var prev = fingerprint(o0) // doubles as the skip-empty probe: cnt == 0
-    var changed = prev._1
-    var it = 0
-    while (changed > 0 && it < maxIters) {
-      val (n0, oi) = observed(round(edges), s"cc_round_$it")
-      val next = n0.localCheckpoint(eager = true)
-      val cur = fingerprint(oi)
-      // fingerprint mismatch PROVES the sets differ; only a match needs
-      // the authoritative limit(1)-bounded symmetric-difference probe
-      changed =
-        if (cur != prev) 1L
-        else next.join(edges, Seq("u", "v"), "left_anti").limit(1)
-          .unionByName(edges.join(next, Seq("u", "v"), "left_anti").limit(1))
-          .limit(1).count()
-      prev = cur
-      edges = next
-      it += 1
-    }
-    if (changed > 0) throw new IllegalStateException(
-      s"duplicateClusters did not converge in $maxIters rounds — " +
-        "output would carry partially-contracted cluster labels")
-    // at the star fixpoint every non-root node has exactly one edge to its
-    // component's min; roots (and self-paired singletons) label themselves
-    val nodes = pairs.select(col(idA).as("doc_id"))
-      .unionByName(pairs.select(col(idB).as("doc_id"))).distinct()
-    val labels = nodes
-      .join(edges.select(col("u").as("doc_id"), col("v").as("_c")), Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("_c"), col("doc_id")).as("cluster_id"))
-      .localCheckpoint(eager = true)
-    (labels, it)
-  }
 
   /** Survivor selection: the deduplicated corpus given [[duplicateClusters]]
     * output — keep every doc that is its own cluster's keeper (cluster_id

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
@@ -357,16 +358,18 @@ object PropertyGraph {
 
   /** Connected components over the undirected view of an edge relation:
     * (node_id, component_id) for every node in >= 1 edge, component_id =
-    * MIN node id of the component — the first-class graph surface of the
-    * alternating large-star/small-star kernel (Kiveris et al., SoCC'14)
-    * that dedup clustering already runs ([[Dedup.duplicateClusters]]);
-    * the reference's component-style traversals (graph.py:844-902) walk
+    * MIN node id of the component (Spark's ordering of the id type) — the
+    * first-class graph surface of [[Dedup.duplicateClusters]]'s
+    * large-star/small-star kernel (Kiveris et al., SoCC'14); the
+    * reference's component-style traversals (graph.py:844-902) walk
     * adjacency per seed, which cannot enumerate all components at scale.
-    * O(log n) rounds regardless of component diameter; each round is a
-    * groupBy-min + self-join on the edge relation (see the kernel's doc
-    * for the fixpoint machinery). Isolated vertices (no edges) are not
-    * emitted — union them in as their own singleton components if the
-    * vertex relation is authoritative. */
+    *
+    * Scale shape: O(log n) rounds regardless of component diameter, each
+    * a few exchanges of int pairs over [[ResidentGraph]]'s dictionary
+    * ranges and ONE job (the exact fixpoint test); `maxIters` is a
+    * fail-loud bound. Isolated vertices (no edges) are not emitted — union
+    * them in as their own singleton components if the vertex relation is
+    * authoritative. */
   def connectedComponents(edges: DataFrame, srcCol: String = "src",
                           dstCol: String = "dst",
                           maxIters: Int = 50): DataFrame =
@@ -386,190 +389,79 @@ object PropertyGraph {
     * graph is a terminating decimal, which can sit EXACTLY on a rounding
     * boundary and flip under cross-engine summation-order noise; 1/N
     * makes the values non-terminating, so boundaries are hit with
-    * probability ~0.)
+    * probability ~0.) Duplicate edges count in the out-degree and carry
+    * one share each.
     *
-    * Scale shape: the adjacency (edge list + out-degree) is partitioned
-    * by src and cached ONCE; each round re-shuffles only the rank vector
-    * (one src-keyed join, one dst-keyed aggregate — the two-exchange
-    * round every distributed PageRank pays). localCheckpoint fires every
-    * `checkpointInterval` rounds; the default of 1 (every round) is the
-    * measured optimum — although the rank lineage is linear (one
-    * downstream reference per round), letting 4-5 rounds of join+agg
-    * nest into one plan measured ~2x SLOWER end-to-end than per-round
-    * materialization (deep shuffle chains replan poorly under AQE). */
+    * Scale shape: the graph is packed ONCE into [[ResidentGraph]]'s
+    * per-partition route arrays (one sampling job); each round is one
+    * `zipPartitions` plus one exchange of pre-summed rank shares, chained
+    * as RDD lineage — the whole fixed-iteration run is one more job, with
+    * no Catalyst plan or codegen per round. */
   def pageRank(edges: DataFrame, iterations: Int = 5,
                damping: Double = 0.85,
-               checkpointInterval: Int = 1,
                tolerance: Double = 0.0,
                redistributeDangling: Boolean = false): DataFrame =
-    pageRankWithStats(edges, iterations, damping, checkpointInterval,
-      tolerance, redistributeDangling)._1
+    pageRankWithStats(edges, iterations, damping, tolerance, redistributeDangling)._1
 
   /** [[pageRank]] plus the number of rounds actually run (== `iterations`
     * unless `tolerance` stopped early) — package-private so the spec can
     * assert convergence behavior without timing heuristics.
     *
-    * `tolerance > 0` adds an early stop: after each round, max |Δrank| is
-    * measured (one scalar aggregate over the node-sized rank vector —
-    * cheap next to the round's own two exchanges) and iteration ends once
-    * it drops below the tolerance. `redistributeDangling` adds the
-    * standard dangling-mass term (rank mass sitting on nodes with no
+    * `tolerance > 0` adds an early stop: each round's ranks are persisted
+    * and max |Δrank| is read by one driver action per round; iteration
+    * ends once it drops below the tolerance. `redistributeDangling` adds
+    * the standard dangling-mass term (rank mass sitting on nodes with no
     * out-edges is spread uniformly: rank = (1-d)/N + d·(Σ inflow + dm/N),
-    * the convention GraphX/NetworkX follow), at the cost of one scalar
-    * aggregate per round. Both are OFF by default — the fixed-iteration,
-    * no-redistribution form stays byte-stable for the cross-engine
-    * oracle, and when both flags are off the per-round plan is the
-    * IDENTICAL column expression (no `+ 0.0` term sneaks in). */
-  /** Round-fusion depth for the dangling-redistribution PageRank branch
-    * (1 = materialize per round, 2 = pair-fuse; the dm scalar is in-plan
-    * either way, so results are identical). Package-private for the A/B
-    * harness. r15 DECIDED = 1, same instrument and verdict as
-    * [[HitsFuseRounds]] (3/3 reps: 5.8-6.5 s vs 7.1-9.0 s at sf0.1). */
-  private[graft] var DanglingFuseRounds = 1
-
+    * the convention GraphX/NetworkX follow); dm is summed per partition
+    * and rides the round's own exchange, so it costs no action. Both are
+    * OFF by default. The teleport is `(1.0 - d)/N` as a double
+    * subtraction then division, the same double an SQL oracle computing
+    * literally `(1.0 - 0.85)/n` gets. */
   private[graft] def pageRankWithStats(edges: DataFrame, iterations: Int = 5,
                damping: Double = 0.85,
-               checkpointInterval: Int = 1,
                tolerance: Double = 0.0,
                redistributeDangling: Boolean = false): (DataFrame, Int) = {
     require(iterations > 0, s"iterations must be positive: $iterations")
-    val spark = edges.sparkSession
-    val nparts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val e = edges.select(col("src"), col("dst"))
-    val adj = e.join(e.groupBy("src").agg(count(lit(1)).as("_outdeg")), "src")
-      .repartition(nparts, col("src")).persist()
-    val plainNodes = e.select(col("src").as("id"))
-      .unionByName(e.select(col("dst").as("id"))).distinct()
-    // with redistribution the node relation carries a dangling flag
-    // (appears as a dst but never as a src), so each round's dangling
-    // mass is harvested by an observe() metric ON the round's own
-    // checkpoint action — zero extra jobs, where a separate per-round
-    // aggregate would double the round count's fixed job cost
-    val nodes =
-      (if (redistributeDangling)
-        plainNodes.join(e.select(col("src").as("id")).distinct()
-            .withColumn("_out", lit(true)), Seq("id"), "left")
-          .select(col("id"), col("_out").isNull.as("_dangling"))
-      else plainNodes).persist()
-    try {
-      val n = nodes.count().toDouble
-      // teleport written as (1.0 - d)/n IN COLUMN ALGEBRA so an SQL
-      // oracle computing literally (1.0 - 0.85)/n gets the identical
-      // double (1 - 0.85 as a double subtraction != the literal 0.15)
-      val teleport = (lit(1.0) - lit(damping)) / lit(n)
-      var ranks = nodes.withColumn("rank", lit(1.0) / lit(n))
-      if (redistributeDangling && tolerance == 0.0) {
-        // r15 (guide §2.4/§1.2; r14 verdict "cut the iterative-graph job
-        // floor"): the dangling-mass scalar no longer costs an action per
-        // round. Each round's dm is Σ rank over dangling nodes of the
-        // round's INPUT frame — a one-row aggregate that rides the
-        // round's own plan as a broadcast crossJoin instead of an
-        // observe() on a per-round eager checkpoint, and the old round-0
-        // dangling scalar job disappears entirely. Rounds still
-        // materialize one-per-action ([[DanglingFuseRounds]] = 1): the
-        // pair-fused two-round plan measured 20-30% SLOWER on the
-        // JVM-level interleaved A/B — plan depth costs more than the
-        // saved action. Per-node arithmetic is IDENTICAL (same teleport/
-        // damping/spread expression, dm as a one-row column instead of a
-        // literal); the dm sum adds the same addends with a possibly
-        // different partial-sum grouping than the old observe's
-        // accumulator merge — the summation-order regime the 1/N
-        // formulation is already engineered for (operator doc;
-        // oracle-verified at every SF).
-        def dmOf(r: DataFrame): DataFrame =
-          r.agg(coalesce(sum(when(col("_dangling"), col("rank"))), lit(0.0))
-            .as("_dm"))
-        def round(r: DataFrame): DataFrame = {
-          val contribs = adj
-            .join(r.select(col("id").as("src"), col("rank")), "src")
-            .select(col("dst").as("id"), (col("rank") / col("_outdeg")).as("_c"),
-              lit(null).cast("boolean").as("_dangling"))
-          val inflow = contribs
-            .unionByName(nodes.select(col("id"), lit(0.0).as("_c"), col("_dangling")))
-            .groupBy("id").agg(sum(col("_c")).as("_inflow"),
-              max(col("_dangling")).as("_dangling"))
-          inflow.crossJoin(broadcast(dmOf(r)))
-            .select(col("id"),
-              (teleport + lit(damping) * (col("_inflow") + col("_dm") / lit(n)))
-                .as("rank"),
-              col("_dangling"))
+    ResidentGraph.run { scope =>
+      val g = ResidentGraph.build(scope, edges, "src", "dst", withIn = false)
+      val dangling = redistributeDangling
+      def round(ranks: RDD[Array[Double]]): RDD[Array[Double]] = {
+        val shares = g.parts.zipPartitions(ranks) { (pi, ri) =>
+          val pt = pi.next(); val r = ri.next()
+          val c = new Array[Double](pt.size)
+          var dm = 0.0
+          for (u <- c.indices) {
+            if (pt.outDeg(u) > 0) c(u) = r(u) / pt.outDeg(u)
+            else if (dangling) dm += r(u)
+          }
+          Iterator((c, dm))
         }
-        var i = 0
-        while (i < iterations) {
-          val step = math.min(DanglingFuseRounds, iterations - i)
-          val next = if (step == 2) round(round(ranks)) else round(ranks)
-          ranks = next.localCheckpoint(eager = true)
-          i += step
+        g.parts.zipPartitions(ResidentGraph.exchange(g, shares, reverse = false)) { (pi, xi) =>
+          val n = pi.next().nodes.total.toDouble
+          val (inflow, dm) = xi.next()
+          val teleport = (1.0 - damping) / n
+          Iterator(inflow.map(x =>
+            if (dangling) teleport + damping * (x + dm / n) else teleport + damping * x))
         }
-        return (ranks.drop("_dangling"), iterations)
       }
-      // round-0 dangling mass needs its own (node-vector-sized) scalar
-      // job; every later round's rides the checkpoint observation
-      var dm: Double =
-        if (redistributeDangling)
-          ranks.where(col("_dangling"))
-            .agg(coalesce(sum(col("rank")), lit(0.0))).head().getDouble(0)
-        else 0.0
-      var itersRun = 0
+      var ranks = g.parts.map(pt => Array.fill(pt.size)(1.0 / pt.nodes.total))
+      var rounds = 0
       var converged = false
-      for (i <- 1 to iterations if !converged) {
-        // Zero-fill by UNION, not join (r14, guide §2.4): a per-node 0.0
-        // row rides the round's one dst-keyed exchange and the aggregate
-        // replaces the old `nodes LEFT JOIN inflow` + coalesce — one whole
-        // join (and its broadcast/shuffle stage) gone from every round.
-        // Bit-identical: contributions are positive finite doubles, and
-        // x + 0.0 == x for them, so inserting a 0.0 term leaves every
-        // partial sum unchanged; a node with no inflow sums to exactly
-        // the 0.0 the coalesce produced. The dangling flag rides the
-        // zero row (exactly one per node); contributions carry null, so
-        // max() recovers the flag deterministically.
-        val contribs = adj
-          .join(ranks.select(col("id").as("src"), col("rank")), "src")
-          .select(col("dst").as("id"), (col("rank") / col("_outdeg")).as("_c"))
-        val zeros = nodes.select(
-          col("id") +: lit(0.0).as("_c") +:
-            (if (redistributeDangling) Seq(col("_dangling")) else Nil): _*)
-        val unioned =
-          if (redistributeDangling)
-            contribs.withColumn("_dangling", lit(null).cast("boolean"))
-              .unionByName(zeros)
-          else contribs.unionByName(zeros)
-        val aggCols = sum(col("_c")).as("_inflow") +:
-          (if (redistributeDangling) Seq(max(col("_dangling")).as("_dangling")) else Nil)
-        val inflow = unioned.groupBy("id").agg(aggCols.head, aggCols.tail: _*)
-        val spread =
-          if (redistributeDangling) col("_inflow") + lit(dm) / lit(n)
-          else col("_inflow")
-        val outCols = col("id") +:
-          (teleport + lit(damping) * spread).as("rank") +:
-          (if (redistributeDangling) Seq(col("_dangling")) else Nil)
-        var next = inflow.select(outCols: _*)
-        val obs =
-          if (redistributeDangling) {
-            val o = org.apache.spark.sql.Observation(s"pr_dangling_$i")
-            next = next.observe(o, coalesce(
-              sum(when(col("_dangling"), col("rank"))), lit(0.0)).as("dm"))
-            Some(o)
-          } else None
-        // redistribution materializes every round regardless of the
-        // checkpoint interval: the next round's dangling scalar comes
-        // from this round's action
-        if (i % checkpointInterval == 0 || i == iterations || tolerance > 0 ||
-            redistributeDangling)
-          next = next.localCheckpoint(eager = true)
-        obs.foreach(o => dm = o.get("dm").asInstanceOf[Double])
+      while (rounds < iterations && !converged) {
+        val next = round(ranks)
         if (tolerance > 0) {
-          val delta = next
-            .join(ranks.select(col("id"), col("rank").as("_prev")), "id")
-            .agg(max(abs(col("rank") - col("_prev")))).head().getDouble(0)
-          if (delta < tolerance) converged = true
+          scope.hold(next)
+          val delta = ranks.zipPartitions(next) { (a, b) =>
+            val (x, y) = (a.next(), b.next())
+            Iterator(x.indices.foldLeft(0.0)((m, i) => math.max(m, math.abs(y(i) - x(i)))))
+          }.collect().foldLeft(0.0)(math.max)
+          if (rounds > 0) scope.drop(ranks)
+          converged = delta < tolerance
         }
         ranks = next
-        itersRun = i
+        rounds += 1
       }
-      (ranks.drop("_dangling"), itersRun)
-    } finally {
-      adj.unpersist(); nodes.unpersist()
+      (ResidentGraph.scoreFrame(g.enc, Seq("id", "rank"), ranks.map(Array(_))), rounds)
     }
   }
 
@@ -580,54 +472,41 @@ object PropertyGraph {
     * relevance ranking "how reachable is v FROM these seeds" — the graph
     * side of seed-expansion retrieval, where plain PageRank is global
     * importance. Fixed-iteration, no dangling redistribution — the
-    * [[pageRank]] oracle-stable stance — and the same two-exchange round
-    * shape: cached src-partitioned adjacency, only the rank vector
-    * shuffles per round. */
+    * [[pageRank]] oracle-stable stance. Sources are compared with the ids
+    * as `isin` would (cast to the id type); a source that is not a node
+    * fails loud.
+    *
+    * Scale shape: [[pageRank]]'s resident rounds; one extra job counts the
+    * sources found before any round runs. */
   def personalizedPageRank(edges: DataFrame, sources: Seq[String],
-                           iterations: Int = 5, damping: Double = 0.85,
-                           checkpointInterval: Int = 1): DataFrame = {
+                           iterations: Int = 5, damping: Double = 0.85): DataFrame = {
     require(iterations > 0, s"iterations must be positive: $iterations")
     require(sources.nonEmpty, "personalizedPageRank needs at least one source")
-    val spark = edges.sparkSession
-    val nparts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val e = edges.select(col("src"), col("dst"))
-    val adj = e.join(e.groupBy("src").agg(count(lit(1)).as("_outdeg")), "src")
-      .repartition(nparts, col("src")).persist()
-    val nodes = e.select(col("src").as("id"))
-      .unionByName(e.select(col("dst").as("id"))).distinct()
-      .withColumn("_src", col("id").isin(sources: _*)).persist()
-    try {
-      val nSrc = nodes.where(col("_src")).count()
+    ResidentGraph.run { scope =>
+      val g = ResidentGraph.build(scope, edges, "src", "dst", withIn = false)
+      val isSource = ResidentGraph.flags(g.enc, sources)
+      val nSrc = isSource.map(_.count(identity)).collect().sum
       require(nSrc == sources.distinct.length,
         s"personalizedPageRank: ${sources.distinct.length - nSrc} source(s) " +
           s"absent from the graph: sources must be existing node ids")
-      // teleport algebra mirrors pageRank: (1.0 - d)/|S| as COLUMN ops so
-      // the SQL oracle's literal arithmetic lands on the identical double
-      val teleport = (lit(1.0) - lit(damping)) / lit(nSrc.toDouble)
-      val seed = when(col("_src"), lit(1.0) / lit(nSrc.toDouble)).otherwise(lit(0.0))
-      var ranks = nodes.withColumn("rank", seed)
-      for (i <- 1 to iterations) {
-        // union zero-fill, not a join — the pageRank r14 rewrite: the
-        // per-node 0.0 row rides the dst-keyed exchange, max() recovers
-        // the _src flag from the zero row (contributions carry null)
-        val inflow = adj
-          .join(ranks.select(col("id").as("src"), col("rank")), "src")
-          .select(col("dst").as("id"), (col("rank") / col("_outdeg")).as("_c"),
-            lit(null).cast("boolean").as("_src"))
-          .unionByName(nodes.select(col("id"), lit(0.0).as("_c"), col("_src")))
-          .groupBy("id").agg(sum(col("_c")).as("_inflow"),
-            max(col("_src")).as("_src"))
-        var next = inflow
-          .select(col("id"), col("_src"),
-            (when(col("_src"), teleport).otherwise(lit(0.0)) +
-              lit(damping) * col("_inflow")).as("rank"))
-        if (i % checkpointInterval == 0 || i == iterations)
-          next = next.localCheckpoint(eager = true)
-        ranks = next
+      // (1.0 - d)/|S| as a double subtraction then division, like pageRank
+      val teleport = (1.0 - damping) / nSrc.toDouble
+      val seed = 1.0 / nSrc.toDouble
+      var ranks = isSource.map(_.map(s => if (s) seed else 0.0))
+      for (_ <- 1 to iterations) {
+        val shares = g.parts.zipPartitions(ranks) { (pi, ri) =>
+          val pt = pi.next(); val r = ri.next()
+          Iterator((Array.tabulate(pt.size)(u =>
+            if (pt.outDeg(u) > 0) r(u) / pt.outDeg(u) else 0.0), 0.0))
+        }
+        ranks = isSource.zipPartitions(ResidentGraph.exchange(g, shares, reverse = false)) {
+          (si, xi) =>
+            val s = si.next(); val inflow = xi.next()._1
+            Iterator(Array.tabulate(s.length)(v =>
+              (if (s(v)) teleport else 0.0) + damping * inflow(v)))
+        }
       }
-      ranks.drop("_src")
-    } finally {
-      adj.unpersist(); nodes.unpersist()
+      ResidentGraph.scoreFrame(g.enc, Seq("id", "rank"), ranks.map(Array(_)))
     }
   }
 
@@ -642,128 +521,38 @@ object PropertyGraph {
     * Fixed iteration count, deterministic, oracle-checkable. Returns
     * (id, authority, hub) over all nodes; pure sources score authority 0,
     * pure sinks hub 0 — not NULL — like the reference's degree-style
-    * stats over its node universe (graph.py:436-515).
+    * stats over its node universe (graph.py:436-515). Duplicate edges
+    * count once each.
     *
-    * Scale shape mirrors [[pageRank]]: the edge list is cached ONCE in
-    * both join layouts (src-keyed for the auth gather, dst-keyed for the
-    * hub gather); each half-round shuffles only the node-sized score
-    * vector, and the normalization sum rides an observe() metric on the
-    * half-round's own checkpoint action — zero extra jobs. */
-  def hits(edges: DataFrame, iterations: Int = 5): DataFrame =
-    hitsImpl(edges, iterations, fuseRounds = HitsFuseRounds)
-
-  /** Round-fusion depth for [[hits]]: how many full rounds compose into
-    * one localCheckpoint action (1 = materialize per round, 2 = pair-fuse;
-    * normalization is in-plan either way, so results are identical).
-    * Package-private and mutable ONLY so the A/B harness measures both.
-    * r15 DECIDED = 1: the JVM-level interleaved A/B (3/3 reps, sf0.1,
-    * matched floor) read pair-fusion 25-40% SLOWER — the deep two-round
-    * plan costs more in planning/codegen than the saved action; the real
-    * win was moving the normalization scalar in-plan (no per-half-round
-    * observe action), which both settings keep. */
-  private[graft] var HitsFuseRounds = 1
-
-  private[graft] def hitsImpl(edges: DataFrame, iterations: Int,
-                              fuseRounds: Int): DataFrame = {
+    * Scale shape: the graph is packed ONCE with both edge directions
+    * ([[ResidentGraph]]); a round is two exchanges (auth gather along
+    * out-edges, hub gather along in-edges) that carry RAW sums. Gathers
+    * are linear, so normalizing a vector before the next gather only
+    * rescales what the next normalization divides out: each vector is
+    * divided by its own sum once, at the end. Round 1 gathers the literal
+    * 1/N vector. The auth sum rides the hub exchange; the final hub sum
+    * is one small driver action. */
+  def hits(edges: DataFrame, iterations: Int = 5): DataFrame = {
     require(iterations > 0, s"iterations must be positive: $iterations")
-    require(fuseRounds == 1 || fuseRounds == 2, s"fuseRounds: $fuseRounds")
-    val spark = edges.sparkSession
-    val nparts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val e = edges.select(col("src"), col("dst"))
-    val bySrc = e.repartition(nparts, col("src")).persist()
-    val byDst = e.repartition(nparts, col("dst")).persist()
-    val nodes = e.select(col("src").as("id"))
-      .unionByName(e.select(col("dst").as("id"))).distinct().persist()
-    try {
-      val n = nodes.count().toDouble
-      var hubs = nodes.withColumn("score", lit(1.0) / lit(n))
-      // Sum-normalization as IN-PLAN algebra (r15; r14 verdict "cut the
-      // iterative-graph job floor"): the normalization scalar is a
-      // one-row aggregate of the raw vector crossJoined back in — not an
-      // observe() riding a per-round eager checkpoint — so rounds
-      // compose. The divisor sums the same addends as the old observed
-      // metric (partial-sum grouping may differ from the accumulator
-      // merge order; the sum-of-ratios formulation absorbs that, the
-      // q84 stance, oracle-verified at every SF). The raw vector's
-      // aggregate exchange is shared between the sum and the division
-      // via exchange reuse, so the gather still runs once.
-      def normalized(raw: DataFrame): DataFrame =
-        raw.crossJoin(broadcast(raw.agg(sum(col("_raw")).as("_s"))))
-          .select(col("id"), (col("_raw") / col("_s")).as("score"))
-      // One FULL round's raw hub vector: the auth half's normalization
-      // cancels out of the hub update (gather is linear —
-      // gather(raw/sa)/Σgather(raw/sa) = gather(raw)/Σgather(raw)), so
-      // both gathers compose into one plan. The intermediate auth vector
-      // needs no zero-fill: a zero score adds +0.0 to a sum
-      // (bit-neutral) and an absent group lands as 0.0 either way; the
-      // hub output zero-fills by union into its own aggregate (r14,
-      // guide §2.4).
-      def rawRound(scores: DataFrame): DataFrame = {
-        val rawA = bySrc
-          .join(scores.select(col("id").as("src"), col("score")), "src")
-          .groupBy(col("dst")).agg(sum(col("score")).as("score"))
-        byDst.join(rawA, "dst")
-          .select(col("src").as("id"), col("score").as("_c"))
-          .unionByName(nodes.select(col("id"), lit(0.0).as("_c")))
-          .groupBy("id").agg(sum(col("_c")).as("_raw"))
+    ResidentGraph.run { scope =>
+      val g = ResidentGraph.build(scope, edges, "src", "dst", withIn = true)
+      var hub = g.parts.map(pt => Array.fill(pt.size)(1.0 / pt.nodes.total))
+      var auth: RDD[(Array[Double], Double)] = null
+      var hubSums: RDD[(Array[Double], Double)] = null
+      for (_ <- 1 to iterations) {
+        auth = ResidentGraph.exchange(g, hub.map((_, 0.0)), reverse = false)
+        // the hub gather also sums every range's raw auth: Σauth arrives
+        // with the raw hubs
+        hubSums = ResidentGraph.exchange(g, auth.map { case (a, _) => (a, a.sum) },
+          reverse = true)
+        hub = hubSums.map(_._1)
       }
-      // zero-filled single gather (the emitted final half-rounds)
-      def rawHalf(scores: DataFrame, keyIn: String, keyOut: String,
-                  layout: DataFrame): DataFrame =
-        layout
-          .join(scores.select(col("id").as(keyIn), col("score")), keyIn)
-          .select(col(keyOut).as("id"), col("score").as("_c"))
-          .unionByName(nodes.select(col("id"), lit(0.0).as("_c")))
-          .groupBy("id").agg(sum(col("_c")).as("_raw"))
-      if (fuseRounds == 2) {
-        // pair-fused variant, kept ONLY for the A/B harness: normalized()
-        // over the uncached gather computes the gather twice per
-        // normalization (no exchange reuse fired — plans/r15 probe:
-        // 34 exchanges/round vs 16) and measured 25-40% slower.
-        var i = 1
-        while (i < iterations) {
-          val step = math.min(2, iterations - i)
-          val next =
-            if (step == 2) normalized(rawRound(normalized(rawRound(hubs))))
-            else normalized(rawRound(hubs))
-          hubs = next.localCheckpoint(eager = true)
-          i += step
-        }
-        val auths = normalized(rawHalf(hubs, "src", "dst", bySrc))
-        val hubsF = normalized(rawHalf(auths, "dst", "src", byDst))
-        return auths.select(col("id"), col("score").as("authority"))
-          .join(hubsF.select(col("id"), col("score").as("hub")), "id")
-          .localCheckpoint(eager = true)
-      }
-      // DECIDED shape (r15): checkpoint the RAW gathered vector each
-      // round and defer the normalization DIVISION into the next
-      // consumer's plan, where both the one-row sum and the division
-      // read the CACHED raw — one gather per action, no observe, no
-      // double compute (normalized() over the uncached gather ran the
-      // gather twice: probe read 34 exchanges/round vs 16 and 0 reused).
-      // Values are bit-identical: each element's raw/Σraw division sees
-      // the same operands, merely later in the plan; round 1 still feeds
-      // the literal 1/N vector (never a divided one — Σ of N×(1/N) is
-      // 1±ulp, and dividing by it would perturb the declared values).
-      var scoresIn = hubs // round 1: the literal 1/N vector
-      var i = 1
-      while (i < iterations) {
-        val raw = rawRound(scoresIn).localCheckpoint(eager = true)
-        scoresIn = normalized(raw)
-        i += 1
-      }
-      // final round: both half-round raw vectors checkpoint (single
-      // gather each), the output join divides both over cached raws
-      val authsRaw = rawHalf(scoresIn, "src", "dst", bySrc)
-        .localCheckpoint(eager = true)
-      val auths = normalized(authsRaw)
-      val hubsRawF = rawHalf(auths, "dst", "src", byDst)
-        .localCheckpoint(eager = true)
-      auths.select(col("id"), col("score").as("authority"))
-        .join(normalized(hubsRawF).select(col("id"), col("score").as("hub")), "id")
-        .localCheckpoint(eager = true)
-    } finally {
-      bySrc.unpersist(); byDst.unpersist(); nodes.unpersist()
+      val hubTotal = hub.map(_.sum).collect().sum
+      ResidentGraph.scoreFrame(g.enc, Seq("id", "authority", "hub"),
+        auth.zipPartitions(hubSums) { (ai, hi) =>
+          val a = ai.next()._1; val (h, authTotal) = hi.next()
+          Iterator(Array(a.map(_ / authTotal), h.map(_ / hubTotal)))
+        })
     }
   }
 
@@ -907,7 +696,7 @@ object PropertyGraph {
     * dist_t(v) = min(dist_{t-1}(v), min_{(u,v,w)} dist_{t-1}(u) + w).
     * Unreached nodes are simply ABSENT (no ∞ sentinel to carry or
     * compare), so the round is one src-keyed join plus one min-aggregate
-    * over (known ∪ relaxed) — the [[pageRank]] two-exchange shape, with
+    * over (known ∪ relaxed), checkpointed — two exchanges per round, with
     * the shuffled vector growing only as the reachable frontier does.
     * Fixed `iterations` (correct for all paths of ≤ that many hops;
     * Bellman-Ford needs diameter rounds to converge), so the whole run
@@ -919,8 +708,7 @@ object PropertyGraph {
   def shortestPathsWeighted(edges: DataFrame, sourceId: String,
                             iterations: Int = 4,
                             srcCol: String = "src", dstCol: String = "dst",
-                            weightCol: String = "weight",
-                            checkpointInterval: Int = 1): DataFrame = {
+                            weightCol: String = "weight"): DataFrame = {
     require(iterations > 0, s"iterations must be positive: $iterations")
     val spark = edges.sparkSession
     val nparts = spark.conf.get("spark.sql.shuffle.partitions").toInt
@@ -930,15 +718,13 @@ object PropertyGraph {
     try {
       var dist = e.sparkSession.range(1)
         .select(lit(sourceId).as("id"), lit(0.0).as("dist"))
-      for (i <- 1 to iterations) {
+      for (_ <- 1 to iterations) {
         val relaxed = e
           .join(dist.select(col("id").as("src"), col("dist")), "src")
           .select(col("dst").as("id"), (col("dist") + col("_w")).as("dist"))
-        var next = dist.unionByName(relaxed)
+        dist = dist.unionByName(relaxed)
           .groupBy("id").agg(min(col("dist")).as("dist"))
-        if (i % checkpointInterval == 0 || i == iterations)
-          next = next.localCheckpoint(eager = true)
-        dist = next
+          .localCheckpoint(eager = true)
       }
       dist
     } finally e.unpersist()
@@ -947,60 +733,30 @@ object PropertyGraph {
   /** Synchronous label propagation (Raghavan et al., Phys. Rev. E'07) —
     * community detection by iterated plurality voting: every node starts
     * as its own label; each round it adopts the most frequent label among
-    * its neighbors, ties broken by the SMALLEST label, so every round is
-    * fully deterministic and the whole run unrolls into a cross-engine
-    * SQL oracle (the q84 stance — fixed `iterations`, no early stop).
-    * Edges vote UNDIRECTED with multigraph semantics: each edge row is
-    * one vote in each direction (graph.py has no community op; this is
-    * the standard large-graph extension next to PageRank/CC).
+    * its neighbors, ties broken by the SMALLEST label (Spark's ordering of
+    * the id type), so every round is fully deterministic and the whole
+    * run unrolls into a cross-engine SQL oracle (the q84 stance — fixed
+    * `iterations`, no early stop). Edges vote UNDIRECTED with multigraph
+    * semantics: each edge row is one vote in each direction, so a
+    * duplicate edge votes twice and a self-loop gives its node two votes
+    * for its own label; a node with no vote keeps its label (graph.py has
+    * no community op; this is the standard large-graph extension next to
+    * PageRank/CC).
     *
-    * Scale shape mirrors [[pageRank]]: the symmetrized adjacency is
-    * partitioned by src and cached ONCE; each round shuffles only the
-    * label vector — one src-keyed join, then the plurality pick as TWO
-    * hash aggregations ((dst,label) counts, then a struct-min over
-    * (-count, label) per dst — algebraically the oracle's
-    * `row_number() OVER (ORDER BY c DESC, label)` pick without the
-    * window sort). localCheckpoint per round, the measured optimum for
-    * iterated shuffle plans on this engine. */
+    * Scale shape: the graph is packed ONCE with both edge directions
+    * ([[ResidentGraph]]); labels are ints whose order is the id order, a
+    * round is one exchange of packed (target, label) votes that each
+    * range sorts and scans, and rounds chain as RDD lineage — one job for
+    * the run plus the packing's sampling job. Labels are decoded to ids
+    * once, at the end. */
   def labelPropagation(edges: DataFrame, iterations: Int = 5,
-                       srcCol: String = "src", dstCol: String = "dst",
-                       checkpointInterval: Int = 1): DataFrame = {
+                       srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(iterations > 0, s"iterations must be positive: $iterations")
-    val spark = edges.sparkSession
-    val nparts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val und = e.unionByName(
-        e.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(nparts, col("src")).persist()
-    val nodes = e.select(col("src").as("id"))
-      .unionByName(e.select(col("dst").as("id"))).distinct().persist()
-    try {
-      var labels = nodes.withColumn("label", col("id"))
-      for (i <- 1 to iterations) {
-        // keep-old-label fallback by UNION, not a join (r14, guide §2.4):
-        // each node contributes its own current label with vote weight 0
-        // into the same (id, label)-keyed exchange the real votes ride.
-        // A weight-0 candidate loses `min(struct(-count, label))` to any
-        // real vote (every real count >= 1 > 0), coincides harmlessly
-        // (+0) when the old label was also voted, and wins exactly when
-        // the node received no votes — the old LEFT JOIN + coalesce
-        // semantics, minus one whole join per round. (On this operator's
-        // symmetrized multigraph every node in fact receives >= 1 vote;
-        // the fallback row preserves strict semantic parity for free.)
-        val votes = und
-          .join(labels.select(col("id").as("src"), col("label")), "src")
-          .select(col("dst").as("id"), col("label"), lit(1L).as("_v"))
-          .unionByName(labels.select(col("id"), col("label"), lit(0L).as("_v")))
-        var next = votes
-          .groupBy("id", "label").agg(sum(col("_v")).as("_c"))
-          .groupBy("id")
-          .agg(min(struct((-col("_c")).as("n"), col("label").as("l"))).as("_w"))
-          .select(col("id"), col("_w.l").as("label"))
-        if (i % checkpointInterval == 0 || i == iterations)
-          next = next.localCheckpoint(eager = true)
-        labels = next
-      }
-      labels
-    } finally { und.unpersist(); nodes.unpersist() }
+    ResidentGraph.run { scope =>
+      val g = ResidentGraph.build(scope, edges, srcCol, dstCol, withIn = true)
+      var labels = g.parts.map(pt => Array.tabulate(pt.size)(pt.nodes.offset + _))
+      for (_ <- 1 to iterations) labels = ResidentGraph.vote(g, labels)
+      ResidentGraph.labelFrame(g.enc, "id", "label", labels)
+    }
   }
 }

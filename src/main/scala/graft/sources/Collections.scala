@@ -293,7 +293,10 @@ object Collections {
     * given generations, as ONE scan with the given data schema plus
     * `_gen`. A listed generation whose dir is gone was folded into the
     * base by a fold that crashed before it reset the history — its rows
-    * are in the base with their `_gen` kept — so it is skipped. */
+    * are in the base with their `_gen` kept — so it is skipped. The
+    * directories are scanned through [[Bridge.parquetDirs]]: a read of
+    * generations alone would otherwise WARN that all its (`_`-prefixed)
+    * paths were ignored. No Spark job runs. */
   def readGenerations(spark: SparkSession, root: String,
                       schema: org.apache.spark.sql.types.StructType,
                       gens: Seq[Long], withBase: Boolean = true): DataFrame = {
@@ -301,10 +304,9 @@ object Collections {
     val fs = fsOf(new org.apache.hadoop.fs.Path(root))
     val dirs = gens.map(genDir(root, _))
       .filter(d => fs.exists(new org.apache.hadoop.fs.Path(d)))
-    spark.read
-      .schema(StructType(schema.filterNot(_.name == GenCol) :+
-        StructField(GenCol, LongType)))
-      .parquet((if (withBase) root +: dirs else dirs): _*)
+    org.apache.spark.sql.graft.Bridge.parquetDirs(spark,
+      if (withBase) root +: dirs else dirs,
+      StructType(schema.filterNot(_.name == GenCol) :+ StructField(GenCol, LongType)))
   }
 
   /** Apply a generation history's truncations and tombstones to rows

@@ -53,4 +53,36 @@ object Bridge {
     * graft releases such RDDs only once nothing reads them again. */
   def releaseBlocks(rdd: org.apache.spark.rdd.RDD[_]): Unit =
     rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+
+  /** Spark's own ordering of a type's Catalyst values (UTF-8 byte order
+    * for strings), as `ORDER BY` and `min` apply it. */
+  def ordering(dt: org.apache.spark.sql.types.DataType): Ordering[Any] =
+    org.apache.spark.sql.catalyst.types.PhysicalDataType.ordering(dt)
+
+  /** A DataFrame over rows that already hold Catalyst values. */
+  def internalFrame(spark: SparkSession,
+                    rows: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+                    schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rows, schema)
+
+  /** One parquet scan over directories with the given schema. Unlike
+    * `spark.read.parquet(dirs: _*)` it does not WARN "All paths were
+    * ignored" when every directory name starts with `_`: the directories
+    * are listed as they are, and their `_`- and `.`-prefixed files are
+    * skipped as usual. Listing runs on the driver, as `spark.read` does
+    * for up to `parallelPartitionDiscovery.threshold` paths. */
+  def parquetDirs(spark: SparkSession, dirs: Seq[String],
+                  schema: org.apache.spark.sql.types.StructType): DataFrame = {
+    import org.apache.spark.sql.execution.datasources._
+    val index = new InMemoryFileIndex(spark, dirs.map(new org.apache.hadoop.fs.Path(_)),
+      Map.empty, Some(schema), FileStatusCache.getOrCreate(spark), None, None)
+    val partitionCols = index.partitionSchema.fieldNames.toSet
+    val dataSchema = org.apache.spark.sql.types.StructType(
+      schema.filterNot(f => partitionCols(f.name))).asNullable
+    val relation = HadoopFsRelation(index, index.partitionSchema, dataSchema, None,
+      new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(),
+      Map.empty)(spark)
+    ofRows(spark, LogicalRelation(relation, isStreaming = false))
+  }
 }

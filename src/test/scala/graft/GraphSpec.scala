@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Cypher, PropertyGraph}
+import graft.operators.{Cypher, Dedup, PropertyGraph}
 import org.apache.spark.sql.functions._
 
 class GraphSpec extends SparkSpec {
@@ -537,5 +537,203 @@ class GraphSpec extends SparkSpec {
       s"a-side: $bridged")
     assert(bridged.filter(_._1.startsWith("b")).values.toSet === Set("a3"),
       s"b-side: $bridged")
+  }
+
+  // ---------------------------------------------- resident-kernel parity
+
+  /** A seeded random multigraph over `ids` plus planted shapes: duplicate
+    * edges, self-loops, a sink, a pure source, an LP tie between "～" and
+    * "😀" (UTF-8 byte order puts "～" first, Java's String.compareTo the
+    * emoji), and a two-node component whose ids disagree the same way. */
+  private def parityEdges(): Seq[(String, String)] = {
+    val rng = new scala.util.Random(7)
+    val ids = (0 until 24).map(i => s"n$i") ++ Seq("a", "Z", "é", "ß")
+    val random = Seq.fill(70)((ids(rng.nextInt(ids.size)), ids(rng.nextInt(ids.size))))
+    random ++ random.take(6) ++ // duplicates
+      Seq(("n3", "n3"), ("n5", "n5"), ("n5", "n5")) ++ // self-loops
+      Seq(("n1", "sink"), ("n2", "sink"), ("source", "n4"), ("source", "n7")) ++
+      Seq(("tie", "～"), ("tie", "😀"), ("😀", "～"), ("😀x", "～x"))
+  }
+
+  /** Driver-side references in the operators' documented formulations,
+    * over nodes sorted in Spark's ordering of the id type. */
+  private final class Reference[K](edges: Seq[(K, K)], cmp: (K, K) => Int) {
+    val nodes: IndexedSeq[K] = edges.flatMap(e => Seq(e._1, e._2)).distinct
+      .sortWith(cmp(_, _) < 0).toIndexedSeq
+    private val ix = nodes.zipWithIndex.toMap
+    private val es = edges.map(e => (ix(e._1), ix(e._2)))
+    private val n = nodes.size
+    private val deg = { val d = new Array[Int](n); es.foreach(e => d(e._1) += 1); d }
+    private def keyed[V](a: Int => V): Map[K, V] = nodes.indices.map(i => nodes(i) -> a(i)).toMap
+
+    def pageRank(iters: Int, dangling: Boolean, tol: Double = 0.0): (Map[K, Double], Int) = {
+      var r = Array.fill(n)(1.0 / n); var rounds = 0; var done = false
+      while (rounds < iters && !done) {
+        val in = new Array[Double](n)
+        es.foreach { case (s, d) => in(d) += r(s) / deg(s) }
+        val dm = if (dangling) nodes.indices.filter(deg(_) == 0).map(r).sum else 0.0
+        val next = in.map(x => (1.0 - 0.85) / n + 0.85 * (x + dm / n))
+        done = tol > 0 && next.indices.map(i => math.abs(next(i) - r(i))).max < tol
+        r = next; rounds += 1
+      }
+      (keyed(r(_)), rounds)
+    }
+
+    def ppr(sources: Set[K], iters: Int): Map[K, Double] = {
+      val src = nodes.map(sources)
+      var r = src.map(s => if (s) 1.0 / sources.size else 0.0).toArray
+      for (_ <- 1 to iters) {
+        val in = new Array[Double](n)
+        es.foreach { case (s, d) => in(d) += r(s) / deg(s) }
+        r = Array.tabulate(n)(v => (if (src(v)) (1.0 - 0.85) / sources.size else 0.0) + 0.85 * in(v))
+      }
+      keyed(r(_))
+    }
+
+    def hits(iters: Int): Map[K, (Double, Double)] = {
+      var hub = Array.fill(n)(1.0 / n); var auth = new Array[Double](n)
+      for (_ <- 1 to iters) {
+        val a = new Array[Double](n); es.foreach { case (s, d) => a(d) += hub(s) }
+        auth = a.map(_ / a.sum)
+        val h = new Array[Double](n); es.foreach { case (s, d) => h(s) += auth(d) }
+        hub = h.map(_ / h.sum)
+      }
+      keyed(i => (auth(i), hub(i)))
+    }
+
+    /** Labels are node indexes, so "smallest label" is Spark's order. */
+    def labelPropagation(iters: Int): Map[K, K] = {
+      var label = Array.tabulate(n)(identity)
+      for (_ <- 1 to iters) {
+        val votes = Array.fill(n)(scala.collection.mutable.Map[Int, Int]())
+        es.foreach { case (s, d) =>
+          votes(d)(label(s)) = votes(d).getOrElse(label(s), 0) + 1
+          votes(s)(label(d)) = votes(s).getOrElse(label(d), 0) + 1
+        }
+        label = Array.tabulate(n)(v =>
+          if (votes(v).isEmpty) label(v) else votes(v).toSeq.minBy(c => (-c._2, c._1))._1)
+      }
+      keyed(i => nodes(label(i)))
+    }
+
+    /** Union-find; each component labelled by its smallest node. */
+    def components: Map[K, K] = {
+      val parent = Array.tabulate(n)(identity)
+      def find(x: Int): Int = if (parent(x) == x) x else { parent(x) = find(parent(x)); parent(x) }
+      es.foreach { case (s, d) =>
+        val (a, b) = (find(s), find(d)); if (a != b) parent(math.max(a, b)) = math.min(a, b)
+      }
+      keyed(i => nodes(find(i)))
+    }
+  }
+
+  private def assertClose[K](got: Map[K, Double], want: Map[K, Double], what: String): Unit = {
+    assert(got.keySet === want.keySet, what)
+    want.foreach { case (k, w) =>
+      assert(math.abs(got(k) - w) <= 1e-12, s"$what at $k: ${got(k)} vs $w") }
+  }
+
+  /** Every ported operator against [[Reference]] on one edge list. */
+  private def checkParity[K](edges: Seq[(K, K)], cmp: (K, K) => Int,
+                             df: org.apache.spark.sql.DataFrame,
+                             sources: Seq[K], lonely: K,
+                             selfPair: org.apache.spark.sql.DataFrame): Unit = {
+    val ref = new Reference(edges, cmp)
+    def scores(d: org.apache.spark.sql.DataFrame): Map[K, Double] =
+      d.collect().map(r => r.getAs[K](0) -> r.getDouble(1)).toMap
+    def labels(d: org.apache.spark.sql.DataFrame): Map[K, K] =
+      d.collect().map(r => r.getAs[K](0) -> r.getAs[K](1)).toMap
+    for (dangling <- Seq(false, true))
+      assertClose(scores(PropertyGraph.pageRank(df, iterations = 6,
+        redistributeDangling = dangling)), ref.pageRank(6, dangling)._1, s"pageRank dangling=$dangling")
+    val (early, rounds) = PropertyGraph.pageRankWithStats(df, iterations = 80,
+      tolerance = 1e-9, redistributeDangling = true)
+    val (want, wantRounds) = ref.pageRank(80, dangling = true, tol = 1e-9)
+    assert(rounds === wantRounds)
+    assertClose(scores(early), want, "pageRank tolerance")
+    assertClose(scores(PropertyGraph.personalizedPageRank(df, sources.map(_.toString),
+      iterations = 5)), ref.ppr(sources.toSet, 5), "personalizedPageRank")
+    val h = PropertyGraph.hits(df, iterations = 5).collect()
+      .map(r => r.getAs[K](0) -> (r.getDouble(1), r.getDouble(2))).toMap
+    val wantH = ref.hits(5)
+    assertClose(h.map { case (k, v) => k -> v._1 }, wantH.map { case (k, v) => k -> v._1 }, "authority")
+    assertClose(h.map { case (k, v) => k -> v._2 }, wantH.map { case (k, v) => k -> v._2 }, "hub")
+    for (iters <- Seq(1, 5))
+      assert(labels(PropertyGraph.labelPropagation(df, iterations = iters)) ===
+        ref.labelPropagation(iters), s"labelPropagation iterations=$iters")
+    assert(labels(PropertyGraph.connectedComponents(df)) === ref.components)
+    // duplicateClusters over the same pairs plus a doc paired only with
+    // itself, which is its own cluster
+    val pairs = df.unionByName(selfPair.toDF("src", "dst"))
+      .select(col("src").as("id_a"), col("dst").as("id_b"))
+    assert(labels(Dedup.duplicateClusters(pairs)) === ref.components + (lonely -> lonely))
+  }
+
+  test("resident kernel: every ported operator equals a driver-side reference (string ids)") {
+    val edges = parityEdges()
+    val utf8 = (a: String, b: String) =>
+      org.apache.spark.unsafe.types.UTF8String.fromString(a)
+        .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b))
+    assert(utf8("～", "😀") < 0 && "～".compareTo("😀") > 0, "the tie ids must disagree")
+    checkParity(edges, utf8, edges.toDF("src", "dst"), Seq("n1", "source", "～"),
+      "lonely", Seq(("lonely", "lonely")).toDF("src", "dst"))
+    // the planted tie resolves in Spark's ordering in round 1, and the
+    // two-node component is labelled by its UTF-8-smallest id
+    val lp = PropertyGraph.labelPropagation(edges.toDF("src", "dst"), iterations = 1)
+      .where(col("id") === "tie").collect().head.getString(1)
+    assert(lp === "～")
+    val cc = PropertyGraph.connectedComponents(edges.toDF("src", "dst"))
+      .where(col("node_id") === "😀x").collect().head.getString(1)
+    assert(cc === "～x")
+  }
+
+  test("resident kernel: every ported operator equals a driver-side reference (long ids)") {
+    val strs = parityEdges()
+    val names = strs.flatMap(e => Seq(e._1, e._2)).distinct.sorted
+    // a scrambled, partly negative id per name: long order is not name order
+    val id = names.zipWithIndex.map { case (s, i) => s -> ((i * 7919L) % 101 - 50) }.toMap
+    assert(id.values.toSet.size === names.size)
+    val edges = strs.map(e => (id(e._1), id(e._2)))
+    checkParity[Long](edges, (a, b) => java.lang.Long.compare(a, b), edges.toDF("src", "dst"),
+      Seq(id("n1"), id("source")), 999L, Seq((999L, 999L)).toDF("src", "dst"))
+  }
+
+  test("resident kernel: every call leaves only its result persisted, also when it throws") {
+    val sc = spark.sparkContext
+    /** The persisted RDD a locally checkpointed result reads. */
+    def owned(df: org.apache.spark.sql.DataFrame): Set[Int] =
+      df.queryExecution.logical.collect {
+        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+      }.toSet
+    def leavesOnlyResult(what: String)(call: => org.apache.spark.sql.DataFrame): Unit = {
+      val before = sc.getPersistentRDDs.keySet
+      val df = call
+      val mine = owned(df)
+      assert(mine.size === 1, s"$what: result reads $mine")
+      assert(sc.getPersistentRDDs.keySet === before ++ mine, what)
+    }
+    def leavesNothing(what: String)(call: => Any): Unit = {
+      val before = sc.getPersistentRDDs.keySet
+      intercept[Exception](call)
+      assert(sc.getPersistentRDDs.keySet === before, what)
+    }
+    val edges = parityEdges().toDF("src", "dst")
+    leavesOnlyResult("pageRank")(PropertyGraph.pageRank(edges))
+    leavesOnlyResult("pageRank dangling")(
+      PropertyGraph.pageRank(edges, redistributeDangling = true))
+    leavesOnlyResult("pageRank tolerance")(
+      PropertyGraph.pageRank(edges, iterations = 30, tolerance = 1e-6))
+    leavesOnlyResult("personalizedPageRank")(
+      PropertyGraph.personalizedPageRank(edges, Seq("n1")))
+    leavesOnlyResult("hits")(PropertyGraph.hits(edges))
+    leavesOnlyResult("labelPropagation")(PropertyGraph.labelPropagation(edges))
+    leavesOnlyResult("connectedComponents")(PropertyGraph.connectedComponents(edges))
+    leavesOnlyResult("duplicateClusters")(Dedup.duplicateClusters(
+      edges.select(col("src").as("id_a"), col("dst").as("id_b"))))
+    leavesNothing("personalizedPageRank with an absent source")(
+      PropertyGraph.personalizedPageRank(edges, Seq("n1", "absent")))
+    val path = (0L until 200L).map(i => (i, i + 1)).toDF("src", "dst")
+    leavesNothing("connectedComponents past maxIters")(
+      PropertyGraph.connectedComponents(path, maxIters = 1))
   }
 }

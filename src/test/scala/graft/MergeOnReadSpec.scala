@@ -237,4 +237,25 @@ class MergeOnReadSpec extends SparkSpec {
     c.delete(ids = Seq("l1"))
     assert(contents(client.getCollection("legacy")) === Map("l2" -> "new lake doc"))
   }
+
+  test("generations read on their own, with no job; an empty generation reads empty") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-gens").toString
+    val schema = org.apache.spark.sql.types.StructType.fromDDL("id STRING, n INT")
+    Seq(("a", 1), ("b", 2)).toDF("id", "n").withColumn(Collections.GenCol, lit(1L))
+      .write.parquet(Collections.genDir(dir, 1))
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+      .withColumn(Collections.GenCol, lit(2L)).write.parquet(Collections.genDir(dir, 2))
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(Collections.genDir(dir, 3)))
+    val sc = spark.sparkContext
+    sc.setJobGroup("read-generations", "read-generations")
+    val (one, empty, bare) = try {
+      (Collections.readGenerations(spark, dir, schema, Seq(1L, 2L), withBase = false),
+        Collections.readGenerations(spark, dir, schema, Seq(2L), withBase = false),
+        Collections.readGenerations(spark, dir, schema, Seq(3L), withBase = false))
+    } finally sc.clearJobGroup()
+    assert(sc.statusTracker.getJobIdsForGroup("read-generations").isEmpty)
+    assert(rowsOf(one) === Set(Row("a", 1, 1L), Row("b", 2, 1L)))
+    assert(empty.count() === 0 && bare.count() === 0)
+    assert(empty.columns.toSeq === Seq("id", "n", Collections.GenCol))
+  }
 }
