@@ -525,32 +525,36 @@ object PropertyGraph {
     * count once each.
     *
     * Scale shape: the graph is packed ONCE with both edge directions
-    * ([[ResidentGraph]]); a round is two exchanges (auth gather along
-    * out-edges, hub gather along in-edges) that carry RAW sums. Gathers
-    * are linear, so normalizing a vector before the next gather only
-    * rescales what the next normalization divides out: each vector is
-    * divided by its own sum once, at the end. Round 1 gathers the literal
-    * 1/N vector. The auth sum rides the hub exchange; the final hub sum
-    * is one small driver action. */
+    * ([[ResidentGraph]]); a round is two exchanges, the auth gather along
+    * out-edges and the hub gather along in-edges, and neither needs a
+    * driver action. Gathers are linear, so dividing a gathered vector by
+    * the sum of the vector it gathered gives the same ratios as
+    * normalizing first: the hub vector travels raw, with its sum riding
+    * the auth exchange, and the auth vector is divided by that sum on
+    * arrival. Every vector thus grows by at most one round's gain (raw
+    * sums chained over rounds overflow a double within a few dozen
+    * rounds on a heavy multi-edge). Round 1 gathers the literal 1/N
+    * vector, undivided. The output vectors are divided by their own
+    * sums: the auth sum rides the hub exchange, the hub sum is one small
+    * driver action. */
   def hits(edges: DataFrame, iterations: Int = 5): DataFrame = {
     require(iterations > 0, s"iterations must be positive: $iterations")
     ResidentGraph.run { scope =>
       val g = ResidentGraph.build(scope, edges, "src", "dst", withIn = true)
       var hub = g.parts.map(pt => Array.fill(pt.size)(1.0 / pt.nodes.total))
-      var auth: RDD[(Array[Double], Double)] = null
+      var auth: RDD[Array[Double]] = null
       var hubSums: RDD[(Array[Double], Double)] = null
-      for (_ <- 1 to iterations) {
-        auth = ResidentGraph.exchange(g, hub.map((_, 0.0)), reverse = false)
-        // the hub gather also sums every range's raw auth: Σauth arrives
-        // with the raw hubs
-        hubSums = ResidentGraph.exchange(g, auth.map { case (a, _) => (a, a.sum) },
-          reverse = true)
+      for (round <- 1 to iterations) {
+        val gathered = ResidentGraph.exchange(g, hub.map(h => (h, h.sum)), reverse = false)
+        auth = if (round == 1) gathered.map(_._1)
+          else gathered.map { case (a, hubTotal) => a.map(_ / hubTotal) }
+        hubSums = ResidentGraph.exchange(g, auth.map(a => (a, a.sum)), reverse = true)
         hub = hubSums.map(_._1)
       }
       val hubTotal = hub.map(_.sum).collect().sum
       ResidentGraph.scoreFrame(g.enc, Seq("id", "authority", "hub"),
         auth.zipPartitions(hubSums) { (ai, hi) =>
-          val a = ai.next()._1; val (h, authTotal) = hi.next()
+          val a = ai.next(); val (h, authTotal) = hi.next()
           Iterator(Array(a.map(_ / authTotal), h.map(_ / hubTotal)))
         })
     }
@@ -587,11 +591,12 @@ object PropertyGraph {
       .repartition(nparts, col("src")).persist()
     try {
       val o0 = org.apache.spark.sql.Observation("kcore_init")
+      // the survivors (id, and from the first round on their degree); each
+      // round's checkpoint is released once the next one has materialized
       var alive = und.select(col("src").as("id")).distinct()
         .observe(o0, count(lit(1)).as("n"))
         .localCheckpoint(eager = true)
       var aliveN = o0.get("n").asInstanceOf[Long]
-      var lastDeg: DataFrame = null
       var converged = false
       var iters = 0
       while (!converged && iters < maxIters) {
@@ -605,17 +610,18 @@ object PropertyGraph {
           .localCheckpoint(eager = true)
         val nextN = o.get("n").asInstanceOf[Long]
         converged = nextN == aliveN
-        lastDeg = next
-        alive = next.select("id")
+        Bm25.releaseCheckpoint(alive)
+        alive = next
         aliveN = nextN
         iters += 1
         if (aliveN == 0) converged = true
       }
+      if (!converged) Bm25.releaseCheckpoint(alive)
       require(converged,
         s"kCore(k=$k) did not converge within $maxIters peel rounds — raise maxIters")
       // the converged round removed nothing, so its survivor degrees ARE
-      // the fixpoint degrees (identical to recomputing over `alive`)
-      lastDeg.select(col("id"), col("degree"))
+      // the fixpoint degrees (identical to recomputing over the survivors)
+      alive.select(col("id"), col("degree"))
     } finally und.unpersist()
   }
 
@@ -722,9 +728,11 @@ object PropertyGraph {
         val relaxed = e
           .join(dist.select(col("id").as("src"), col("dist")), "src")
           .select(col("dst").as("id"), (col("dist") + col("_w")).as("dist"))
-        dist = dist.unionByName(relaxed)
+        val next = dist.unionByName(relaxed)
           .groupBy("id").agg(min(col("dist")).as("dist"))
           .localCheckpoint(eager = true)
+        Bm25.releaseCheckpoint(dist) // the previous round's; no-op for the seed row
+        dist = next
       }
       dist
     } finally e.unpersist()

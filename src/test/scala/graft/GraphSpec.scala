@@ -405,6 +405,12 @@ class GraphSpec extends SparkSpec {
     // sum-normalized: both score vectors are distributions
     close(got.values.map(_._1).sum, 1.0)
     close(got.values.map(_._2).sum, 1.0)
+    // a 2000-fold multi-edge grows an unnormalized vector 4e6x per round,
+    // past Double.MaxValue by round 47; the scores must stay finite
+    val heavy = Seq.fill(2000)(("a", "b")).toDF("src", "dst")
+    val gh = PropertyGraph.hits(heavy, iterations = 60)
+      .collect().map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2))).toMap
+    assert(gh === Map("a" -> (0.0, 1.0), "b" -> (1.0, 0.0)))
   }
 
   test("personalizedPageRank: chain closed form; absent source fails loud") {
@@ -698,7 +704,7 @@ class GraphSpec extends SparkSpec {
       Seq(id("n1"), id("source")), 999L, Seq((999L, 999L)).toDF("src", "dst"))
   }
 
-  test("resident kernel: every call leaves only its result persisted, also when it throws") {
+  test("iterative graph operators leave only their result persisted, also when they throw") {
     val sc = spark.sparkContext
     /** The persisted RDD a locally checkpointed result reads. */
     def owned(df: org.apache.spark.sql.DataFrame): Set[Int] =
@@ -735,5 +741,11 @@ class GraphSpec extends SparkSpec {
     val path = (0L until 200L).map(i => (i, i + 1)).toDF("src", "dst")
     leavesNothing("connectedComponents past maxIters")(
       PropertyGraph.connectedComponents(path, maxIters = 1))
+    // the DataFrame-round operators release every round's checkpoint but
+    // the result's
+    leavesOnlyResult("kCore")(PropertyGraph.kCore(edges, k = 2))
+    leavesOnlyResult("shortestPathsWeighted")(PropertyGraph.shortestPathsWeighted(
+      edges.withColumn("weight", lit(1.0)), "n1", iterations = 4))
+    leavesNothing("kCore past maxIters")(PropertyGraph.kCore(path, k = 2, maxIters = 1))
   }
 }

@@ -62,8 +62,9 @@ def run_once(tree, workload, seed, seconds):
     return result, detail
 
 
-def verdict(pairs, better):
-    """pairs: [(base, change)] of one metric; better: 'lower' or 'higher'."""
+def verdict(pairs, better, runs):
+    """pairs: [(base, change)] of one metric; better: 'lower' or 'higher';
+    runs: the number of pairs run, so a pair with a failed side is no win."""
     sign = 1 if better == "lower" else -1
     wins = sum(1 for b, c in pairs if sign * (b - c) > 0)
     losses = sum(1 for b, c in pairs if sign * (b - c) < 0)
@@ -75,10 +76,10 @@ def verdict(pairs, better):
     return {
         "base": {"median": bmed, "q1": bq1, "q3": bq3, "runs": base},
         "change": {"median": cmed, "q1": cq1, "q3": cq3, "runs": change},
-        "pairs": len(pairs), "change_wins": wins, "change_losses": losses,
+        "pairs": len(pairs), "pairs_run": runs, "change_wins": wins, "change_losses": losses,
         "median_gap": gap, "base_iqr": bq3 - bq1,
         "change_vs_base": (cmed - bmed) / bmed if bmed else None,
-        "gain_claimable": wins * 10 >= 9 * len(pairs) and gap > bq3 - bq1,
+        "gain_claimable": wins * 10 >= 9 * runs and gap > bq3 - bq1,
     }
 
 
@@ -129,7 +130,8 @@ def main():
             if b and c and m["name"] in b[0]["metrics"] and m["name"] in c[0]["metrics"]:
                 pairs.append((b[0]["metrics"][m["name"]], c[0]["metrics"][m["name"]]))
         if pairs:
-            summary[m["name"]] = verdict(pairs, m["better"]) | {"bound": m.get("bound")}
+            summary[m["name"]] = verdict(pairs, m["better"], len(seeds(a.seeds))) | \
+                {"bound": m.get("bound")}
     out = {"workload": a.workload, "base": base_rev, "change": git("rev-parse", "HEAD"),
            "change_tree_dirty": bool(git("status", "--porcelain", "--untracked-files=no")),
            "seconds": a.seconds, "seeds": seeds(a.seeds), "summary": summary, "runs": runs}
@@ -138,7 +140,7 @@ def main():
         print(f"{a.workload} {name}: base {s['base']['median']:.4g} "
               f"[{s['base']['q1']:.4g}, {s['base']['q3']:.4g}] -> change "
               f"{s['change']['median']:.4g} [{s['change']['q1']:.4g}, {s['change']['q3']:.4g}]; "
-              f"change won {s['change_wins']}/{s['pairs']}, gap {s['median_gap']:.4g} vs base IQR "
+              f"change won {s['change_wins']}/{s['pairs_run']}, gap {s['median_gap']:.4g} vs base IQR "
               f"{s['base_iqr']:.4g}; gain claimable: {s['gain_claimable']}")
 
 
